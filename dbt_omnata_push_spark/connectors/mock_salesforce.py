@@ -6,8 +6,11 @@ its integration tests (integration_tests/dbt_project.yml:30-62):
 - per-record load result (lines 46-51): {created, errors[], id, success};
 - close-job descriptor (lines 57-62): state Closed, processing counters.
 
-Deterministic: job ids derive from a seed counter, record ids from the
-record index, so run-twice tests are reproducible. Picklable (no open
+Deterministic: job ids derive from one counter per process, shared by
+every instance, and record ids from the record index, so run-twice
+tests are reproducible. ``get_connector`` builds a fresh instance per
+load, so a per-instance counter would reissue the same job id every
+cycle; the real Bulk API never does. Picklable (no open
 connections) — executors get copies inside mapInPandas stages.
 """
 
@@ -19,9 +22,10 @@ from .base import SalesforceConnector, register_connector
 
 
 class MockSalesforceConnector(SalesforceConnector):
+    _job_seq = itertools.count(1)  # class-wide: job ids unique per process
+
     def __init__(self, job_prefix: str = "750000000000001", call_log: str | None = None):
         self.job_prefix = job_prefix
-        self._seq = itertools.count(1)
         self.created_jobs: list[dict] = []
         self.closed_jobs: list[str] = []
         # Optional append-only file tallying executor-side calls: the
@@ -35,7 +39,7 @@ class MockSalesforceConnector(SalesforceConnector):
                 f.write(f"{kind},{n}\n")
 
     def create_job(self, operation, object_name, use_serial, external_id_field):
-        job_id = f"{self.job_prefix}{next(self._seq):03d}"
+        job_id = f"{self.job_prefix}{next(MockSalesforceConnector._job_seq):03d}"
         meta = {
             "apexProcessingTime": 0,
             "apiActiveProcessingTime": 0,

@@ -20,9 +20,11 @@ Partitioned tables make MERGE O(touched partitions) instead of O(table):
 only partitions present in the merge source are anti-joined and
 rewritten; every other partition directory is hard-linked from the
 previous version (same bytes, new immutable version — the file-level
-analogue of Delta's replaceWhere / Iceberg's overwrite-by-filter). At
-100 TB the tracking log table is merged per run with cost proportional
-to that run's jobs, not the table's history.
+analogue of Delta's replaceWhere / Iceberg's overwrite-by-filter). The
+rewrite is O(touched partitions), but every commit still links each
+file of the previous version and reads list the whole version
+directory, so commit and read cost grow with the partition count —
+on the job_id-partitioned tracking logs, with the table's history.
 
 On a production lakehouse this module is replaced 1:1 by Delta/Iceberg
 (`MERGE INTO`, `mergeSchema`); the materialization layer only talks to

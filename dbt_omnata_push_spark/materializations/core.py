@@ -5,6 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..engine.dag import RunResult
+from ..engine.dml import _obs_count
 from ..engine.model import Context
 
 
@@ -39,31 +40,35 @@ def materialize_incremental(engine, model) -> RunResult:
     - ``insert_overwrite``: dynamic-partition replacement — partitions
       present in the batch swap wholesale, untouched partitions
       hard-link (the large time-partitioned-table strategy).
+
+    ``rows_affected`` is the number of rows written (the CTAS's rows,
+    or the incremental batch's), as dbt reports it — not the table's
+    size. The count rides an Observation on the write (CTAS) or on the
+    batch's one checkpoint, so it costs no extra Spark job.
     """
     ctx = Context(engine, model)
-    df = engine.build_df(model)
+    df, get_n = _obs_count(engine.build_df(model))
     strategy = model.config.get("incremental_strategy")
     if not ctx.is_incremental():
         engine.store.overwrite(
             engine.spark, model.name, df,
             partition_by=model.config.get("partition_by"),
         )
-    elif df.isEmpty():
+        return _published(engine, model, get_n())
+    # The batch is evaluated once: its checkpoint feeds both the
+    # emptiness test and the commit.
+    df = df.localCheckpoint()
+    n = get_n()
+    if n == 0:
         # Empty incremental delta: commit NOTHING (r12). A 0-row
         # append/merge would still cut a new table version, so every
         # downstream stream would report has-data and every CDC
         # consumer would walk a vacuous commit — in Snowflake a 0-row
-        # DML leaves streams silent. isEmpty, not count: one task on
-        # one partition suffices to prove emptiness.
-        out = engine.store.read(engine.spark, model.name)
-        engine._publish(model.name, out, nonstore=False)
-        return RunResult(
-            model.name,
-            "success",
-            rows_affected=out.count(),
-            message="empty incremental batch — no commit",
+        # DML leaves streams silent.
+        return _published(
+            engine, model, 0, message="empty incremental batch — no commit"
         )
-    elif strategy == "insert_overwrite":
+    if strategy == "insert_overwrite":
         engine.store.insert_overwrite(engine.spark, model.name, df)
     else:
         key = model.config.get("unique_key")
@@ -73,9 +78,15 @@ def materialize_incremental(engine, model) -> RunResult:
             engine.store.merge_upsert(engine.spark, model.name, df, key)
         else:
             engine.store.append(engine.spark, model.name, df)
-    out = engine.store.read(engine.spark, model.name)
-    engine._publish(model.name, out, nonstore=False)
-    return RunResult(model.name, "success", rows_affected=out.count())
+    return _published(engine, model, n)
+
+
+def _published(engine, model, n: int, message: str = "") -> RunResult:
+    """Publish the table's current version for downstream models."""
+    engine._publish(
+        model.name, engine.store.read(engine.spark, model.name), nonstore=False
+    )
+    return RunResult(model.name, "success", rows_affected=n, message=message)
 
 
 def materialize_tracking_table(engine, model) -> RunResult:

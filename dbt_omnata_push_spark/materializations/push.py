@@ -4,13 +4,20 @@ Spark-first redesign of the reference's push dataflow (SURVEY.md §2.1
 D1, D4-D8):
 - once-per-run remote ops on the driver; per-batch ops on executors in
   Arrow-batched mapInPandas stages;
-- global row numbering via ops.rownum.with_global_index (never a
-  single-partition window);
+- a Salesforce load evaluates its records exactly once: one
+  localCheckpoint carries a partition-local row index and, through an
+  Observation on the same job, the count behind the empty-load
+  short-circuit; the push's output is checkpointed too, so a lost
+  block fails the load instead of calling the API again;
+- Salesforce tracking rows are appended, as the reference INSERTs them
+  (the task row before the push, one log row per record after it);
+  only the closing UPDATE...FROM rewrites the tasks table;
+- the Marketing Cloud upload keeps dense 1-based numbering via
+  ops.rownum.with_global_index (its batch numbers need it) and writes
+  its task and log rows from one persisted result (Snowflake's
+  multi-table INSERT ALL has no Spark equivalent);
 - deterministic log-entry ids sha2(job_id:row_idx) instead of
-  UUID_STRING() so task retries dedupe (SURVEY.md §7 hard-part 1);
-- tasks+logs double-write replaces Snowflake's multi-table INSERT ALL
-  (no Spark equivalent; the result DataFrame is persisted so both
-  writes share one computation).
+  UUID_STRING() (SURVEY.md §7 hard-part 1).
 """
 
 from __future__ import annotations
@@ -24,6 +31,7 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..connectors.base import get_connector
 from ..engine.dag import RunResult
+from ..engine.dml import _obs_count
 from ..ops.batching import DEFAULT_BATCH_SIZE
 from ..ops.gpg import encrypt_batch, gpg_session_params, json_records_to_csv
 from ..ops.retry import RetryPolicy
@@ -90,9 +98,18 @@ def materialize_load_task(engine, model) -> RunResult:
 
 def _salesforce_bulk_load(engine, model, records: DataFrame, legacy=False) -> RunResult:
     cfg = model.config
-    # Empty-load short-circuit (salesforce.sql:5-18 / load_task:11-25):
-    # probe only when not full-refreshing; isEmpty is a limit-1 scan.
-    if not engine.vars.get("full-refresh-salesforce", False) and records.isEmpty():
+    # The model's records (often a join plus an anti-join against the
+    # whole log table) are evaluated exactly once: one checkpoint carries
+    # the row index and, on the same job, the row count that drives the
+    # empty-load short-circuit (salesforce.sql:5-18 / load_task:11-25).
+    # The index is partition-local, not dense: it only has to be unique
+    # and stable, and once checkpointed it is both.
+    indexed, get_n = _obs_count(
+        records.withColumn("row_idx", F.monotonically_increasing_id())
+    )
+    indexed = indexed.localCheckpoint()
+    n = get_n()
+    if n == 0 and not engine.vars.get("full-refresh-salesforce", False):
         return RunResult(model.name, "skipped", message="empty load, no-op")
 
     connector = get_connector("salesforce", cfg, engine.vars)
@@ -105,7 +122,8 @@ def _salesforce_bulk_load(engine, model, records: DataFrame, legacy=False) -> Ru
     meta = connector.create_job(load_type, object_name, serial, external_id_field)
     job_id = str(meta["id"])
 
-    # (2) task row (salesforce_bulk_load.sql:21-31).
+    # (2) task row, appended like the reference's INSERT
+    # (salesforce_bulk_load.sql:21-31).
     tasks_tbl = tracking.ensure_tracking_table(engine, tracking.SFDC_LOAD_TASKS)
     spark = engine.spark
     task_row = spark.createDataFrame(
@@ -124,20 +142,17 @@ def _salesforce_bulk_load(engine, model, records: DataFrame, legacy=False) -> Ru
         "operation string, external_id_field string, creation_metadata string, "
         "close_metadata string",
     ).withColumn("creation_time", F.current_timestamp())
-    engine.store.merge_upsert(
+    engine.store.append(
         spark,
         tasks_tbl,
         task_row.select(*tracking.SCHEMAS[tracking.SFDC_LOAD_TASKS].fieldNames()),
-        "job_id",
     )
 
     # (3) per-batch push with per-record result capture
-    # (salesforce_bulk_load.sql:34-48). serial_load=true -> one executor
-    # slot == the reference's serial concurrency mode (README.md:71).
-    indexed = with_global_index(records, "row_idx", one_based=False)
-    # serial_load (README.md:71) == max_parallel_batches=1; any bound
-    # caps concurrent remote calls by capping partitions (SURVEY.md §7
-    # hard-part 4: bounded concurrency toward the SaaS API).
+    # (salesforce_bulk_load.sql:34-48). serial_load (README.md:71) ==
+    # max_parallel_batches=1; any bound caps concurrent remote calls by
+    # capping partitions (SURVEY.md §7 hard-part 4: bounded concurrency
+    # toward the SaaS API).
     max_parallel = 1 if serial else cfg.get("max_parallel_batches")
     if max_parallel:
         indexed = indexed.coalesce(int(max_parallel))
@@ -164,31 +179,29 @@ def _salesforce_bulk_load(engine, model, records: DataFrame, legacy=False) -> Ru
                 {"row_idx": pdf["row_idx"], "record": recs, "result": results}
             )
 
-    # Persist + materialize before the merge: merge_upsert evaluates its
-    # source twice (distinct-keys subtree + union subtree); without a
-    # materialized barrier every record would be pushed to the remote API
-    # twice per run.
-    pushed = indexed.mapInPandas(push_batches, _PUSH_SCHEMA).persist()
-    n = pushed.count()
+    # The push runs in this one checkpoint job. A checkpoint, unlike a
+    # persist, cannot be evicted and recomputed, so a lost block fails
+    # the statement instead of calling the remote API a second time.
+    pushed = indexed.mapInPandas(push_batches, _PUSH_SCHEMA).localCheckpoint()
     logs = pushed.select(
         F.lit(job_id).alias("job_id"),
-        # deterministic id (reference: UUID_STRING(), line 40) so task
-        # retries upsert rather than duplicate (SURVEY.md §7 hard-part 1)
+        # deterministic id (reference: UUID_STRING(), line 40)
         F.sha2(F.concat(F.lit(job_id + ":"), F.col("row_idx").cast("string")), 256).alias(
             "job_log_entry_id"
         ),
-        F.lit(model.name).alias("load_task_name"),
-        F.lit(object_name).alias("object_name"),
-        F.lit(load_type).alias("operation"),
-        F.lit(external_id_field).alias("external_id_field"),
+        # typed literals: an append, unlike a merge, has no target
+        # schema to coerce a None config value's void column to
+        F.lit(model.name).cast("string").alias("load_task_name"),
+        F.lit(object_name).cast("string").alias("object_name"),
+        F.lit(load_type).cast("string").alias("operation"),
+        F.lit(external_id_field).cast("string").alias("external_id_field"),
         F.col("record"),
         F.col("result"),
     )
     logs_tbl = tracking.ensure_tracking_table(
         engine, tracking.SFDC_LOAD_TASK_LOGS
     )
-    engine.store.merge_upsert(spark, logs_tbl, logs, "job_log_entry_id")
-    pushed.unpersist()
+    engine.store.append(spark, logs_tbl, logs)
 
     # (4) close job + UPDATE...FROM (salesforce_bulk_load.sql:51-56).
     close_meta = connector.close_job(job_id)

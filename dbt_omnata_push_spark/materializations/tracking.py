@@ -67,9 +67,11 @@ SCHEMAS: dict[str, StructType] = {
 }
 
 
-# Log tables grow by one job's worth of rows per run but are merged every
-# run; partitioning by job_id makes that merge rewrite only the new job's
-# directory (store._partition_scoped_merge) instead of the whole history.
+# Log tables gain one job's worth of rows per push, in a new job_id
+# directory. The Salesforce push appends them; the Marketing Cloud upload
+# merges, and the partitioning confines that merge to the new job's
+# directory (store._partition_scoped_merge). Either commit still links
+# every earlier job's files, so its cost grows with the job count.
 # Task tables stay unpartitioned: one row per job, trivially small.
 PARTITION_BY: dict[str, str] = {
     SFDC_LOAD_TASK_LOGS: "job_id",

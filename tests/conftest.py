@@ -1,7 +1,9 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -120,3 +122,26 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_ORACLE
+
+
+@contextlib.contextmanager
+def job_budget(spark, max_jobs: int):
+    """Fail unless the block launches at most ``max_jobs`` Spark jobs.
+
+    The block runs under a fresh job group (broadcast and shuffle
+    futures inherit it, so asynchronous jobs count too); the previous
+    group is restored on exit."""
+    sc = spark.sparkContext
+    keys = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+    saved = {k: sc.getLocalProperty(k) for k in keys}
+    group = f"job-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job budget")
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            sc.setLocalProperty(k, v)
+    # the status store is fed by the listener bus: drain it first
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= max_jobs, f"launched {jobs} Spark jobs, budget {max_jobs}"

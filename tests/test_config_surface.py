@@ -144,20 +144,35 @@ def test_get_connector_falls_back_to_default_namespace():
 class TestSeedCsvAndFreshness:
     def test_seed_csv_reads_the_references_own_files(self, spark, tmp_path):
         """The reference ships its seeds as CSV (integration_tests/
-        data/*.csv); engine.seed_csv loads those exact files — BOM on
-        accounts.csv's first header included."""
+        data/*.csv); engine.seed_csv loads files of the same kind — a
+        BOM on accounts.csv's first header, a quoted field with an
+        embedded comma, and a numeric column for schema inference."""
         from dbt_omnata_push_spark.engine.dag import Engine
         from dbt_omnata_push_spark.engine.store import TableStore
 
-        engine = Engine(spark, TableStore(str(tmp_path / "s")))
-        accounts = engine.seed_csv(
-            "accounts", "/root/reference/integration_tests/data/accounts.csv"
+        names = [f"Company {i:03d}" for i in range(99)]
+        names.insert(42, '"Lopez, Buchanan and Jordan"')
+        accounts_csv = tmp_path / "accounts.csv"
+        accounts_csv.write_text(
+            "\ufeffNAME,ACCOUNT_ID\n"
+            + "".join(f"{n},acct-{i:03d}\n" for i, n in enumerate(names)),
+            encoding="utf-8",
         )
+        contacts_csv = tmp_path / "contacts.csv"
+        contacts_csv.write_text(
+            "CONTACT_NUMBER,FIRST_NAME,LAST_NAME,EMAIL,TITLE\n"
+            + "".join(
+                f"{i},First{i},Last{i},user{i}@example.com,Title {i % 7}\n"
+                for i in range(1000)
+            ),
+            encoding="utf-8",
+        )
+
+        engine = Engine(spark, TableStore(str(tmp_path / "s")))
+        accounts = engine.seed_csv("accounts", str(accounts_csv))
         assert accounts.columns[0] == "NAME"  # BOM stripped
         assert accounts.count() == 100
-        contacts = engine.seed_csv(
-            "contacts", "/root/reference/integration_tests/data/contacts.csv"
-        )
+        contacts = engine.seed_csv("contacts", str(contacts_csv))
         assert contacts.count() == 1000
         # inferSchema: CONTACT_NUMBER is numeric, EMAIL is string
         types = dict(contacts.dtypes)

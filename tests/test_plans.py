@@ -559,10 +559,10 @@ def test_asof_sql_join_plan_no_cartesian_one_keyed_window(spark, sf_dir):
 def test_dynamic_table_skip_commits_nothing(spark, tmp_path):
     """r13: a version-gated SKIPPED refresh is metadata-only — no new
     backing version, no Spark job over the base table."""
-    import tempfile
-
     from dbt_omnata_push_spark.engine.dag import Engine
     from dbt_omnata_push_spark.engine.store import TableStore
+
+    from .conftest import job_budget
 
     eng = Engine(spark, TableStore(str(tmp_path / "s")))
     eng.query("create table b as select 1 as k, 2 as v")
@@ -571,9 +571,8 @@ def test_dynamic_table_skip_commits_nothing(spark, tmp_path):
         "select k, v from b"
     )
     v0 = eng.store.current_version("d")
-    tracker = spark.sparkContext.statusTracker()
-    jobs_before = len(tracker.getJobIdsForGroup() or [])
-    assert eng.refresh_dynamic_table("d") == "skipped"
+    with job_budget(spark, 0):
+        assert eng.refresh_dynamic_table("d") == "skipped"
     assert eng.store.current_version("d") == v0
 
 
