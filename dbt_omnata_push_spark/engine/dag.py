@@ -2729,12 +2729,7 @@ class Engine:
         the failure-row count), like dbt's test report — it does not
         raise, so a run surfaces EVERY violation, not just the first.
         """
-        from .generic_tests import (
-            accepted_values_failures,
-            not_null_failures,
-            relationships_failures,
-            unique_failures,
-        )
+        from .generic_tests import GENERIC_TESTS
 
         results: dict[str, RunResult] = {}
         for mname in select or list(self.models):
@@ -2745,23 +2740,16 @@ class Engine:
                         kind, params = t, {}
                     else:
                         (kind, params), = t.items()
-                    df = self.ref(mname)
-                    if kind == "unique":
-                        fails = unique_failures(df, col)
-                    elif kind == "not_null":
-                        fails = not_null_failures(df, col)
-                    elif kind == "accepted_values":
-                        fails = accepted_values_failures(
-                            df, col, params["values"]
-                        )
-                    elif kind == "relationships":
-                        fails = relationships_failures(
-                            df, col, self.ref(params["to"]), params["field"]
-                        )
-                    else:
+                    if kind not in GENERIC_TESTS:
                         raise ValueError(
                             f"unknown schema test {kind!r} on {mname}.{col}"
                         )
+                    if kind == "relationships":
+                        params = {
+                            "parent": self.ref(params["to"]),
+                            "parent_col": params["field"],
+                        }
+                    fails = GENERIC_TESTS[kind](self.ref(mname), col, **params)
                     n = fails.count()
                     tid = f"{kind}__{mname}__{col}"
                     results[tid] = RunResult(

@@ -48,6 +48,7 @@ import re
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..ops.observe import materialized, observed
 from .sqlfront import _split_top_level_args, transpile
 
 # ---------------------------------------------------------------------------
@@ -290,20 +291,6 @@ def _summary(engine, **counts) -> DataFrame:
     return engine.spark.createDataFrame([tuple(counts.values())], cols)
 
 
-def _obs_count(df: DataFrame):
-    """Attach a row-count Observation so the count rides the frame's
-    one materializing action (versioned write or localCheckpoint)
-    instead of costing a separate Spark job per statement (r16, guide
-    §1.2 — the DML engine paid count jobs on every INSERT/CTAS/UPDATE/
-    DELETE/MERGE commit). Returns (observed_df, get) — call ``get()``
-    only AFTER the action has run."""
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    out = df.observe(obs, F.count(F.lit(1)).cast("long").alias("n"))
-    return out, (lambda: int(obs.get["n"] or 0))
-
-
 def _run_select(engine, body: str) -> DataFrame:
     body = body.strip()
     if re.match(r"(?is)^values\b", body):
@@ -402,9 +389,9 @@ def _insert(engine, sql: str) -> DataFrame:
     # and the row count rides the write via Observation instead of a
     # separate count job. 3 Spark jobs per INSERT -> 1.
     src = _run_select(engine, body)
-    aligned, get_n = _obs_count(_aligned_for_insert(engine, table, src, cols))
+    aligned, get = observed(_aligned_for_insert(engine, table, src, cols))
     engine.store.append(engine.spark, table, aligned)
-    return _summary(engine, rows_inserted=get_n())
+    return _summary(engine, rows_inserted=get()["n"])
 
 
 # ---------------------------------------------------------------------------
@@ -522,11 +509,11 @@ def _insert_multi(engine, sql: str) -> DataFrame:
                 )
             else:
                 proj = rows
-            aligned, get_n = _obs_count(
+            aligned, get = observed(
                 _aligned_for_insert(engine, table, proj, item["cols"])
             )
             engine.store.append(engine.spark, table, aligned)
-            results[table] = results.get(table, 0) + get_n()
+            results[table] = results.get(table, 0) + get()["n"]
     return engine.spark.createDataFrame(
         sorted(results.items()), "table string, rows_inserted long"
     )
@@ -547,8 +534,6 @@ def _update_fast_path(engine, table, alias, assignments, cond):
     checkpoint, no second job). Returns None when an expression needs
     the general path (e.g. a scalar subquery the stripped-alias
     rendering can't resolve)."""
-    from pyspark.sql import Observation
-
     tgt = engine.store.read(engine.spark, table)
 
     def strip(fragment: str):
@@ -566,11 +551,10 @@ def _update_fast_path(engine, table, alias, assignments, cond):
             else F.col(f.name)
             for f in tgt.schema
         ]
-        obs = Observation()
-        plan = tgt.observe(
-            obs,
-            F.sum(F.when(pred, 1).otherwise(0)).cast("long").alias("n_hit"),
-        ).select(*cols)
+        plan, get = observed(
+            tgt, n_hit=F.sum(F.when(pred, 1).otherwise(0)).cast("long")
+        )
+        plan = plan.select(*cols)
         # Change manifest (r10): pre/post of matched rows where any
         # value actually changed — a pushed-down filtered scan, O(hit)
         # output. Raw events; the reader's key/digest semantics apply
@@ -598,7 +582,7 @@ def _update_fast_path(engine, table, alias, assignments, cond):
     except Exception:
         return None  # general (row-id) path handles it
     engine.store.overwrite(engine.spark, table, plan, cdc_events=events)
-    return _summary(engine, rows_updated=obs.get["n_hit"] or 0)
+    return _summary(engine, rows_updated=get()["n_hit"])
 
 
 def _register_df(engine, df: DataFrame, *names: str) -> None:
@@ -652,11 +636,10 @@ def _update(engine, sql: str) -> DataFrame:
     )
     # r16: the matched-row count rides the checkpoint's materialization
     # via Observation — no separate count job per UPDATE statement.
-    observed, get_n = _obs_count(
+    matches, metrics = materialized(
         engine.spark.sql(match_sql).dropDuplicates([_RID])
     )
-    matches = observed.localCheckpoint()
-    n = get_n()
+    n = metrics["n"]
     joined = tgt.join(matches, _RID, "left")
     out_cols = []
     set_names = {c.lower(): i for i, (c, _) in enumerate(assignments)}
@@ -777,11 +760,10 @@ def _delete(engine, sql: str) -> DataFrame:
         f"SELECT {alias}.{_RID} AS {_RID} FROM {alias}, {src_text}"
         + (f" WHERE {transpile(cond)}" if cond else "")
     )
-    observed, get_n = _obs_count(
+    ids, metrics = materialized(
         engine.spark.sql(match_sql).dropDuplicates([_RID])
     )
-    ids = observed.localCheckpoint()
-    n = get_n()
+    n = metrics["n"]
     kept = tgt.join(ids, _RID, "left_anti").drop(_RID)
     events = (
         tgt.join(ids, _RID, "left_semi")
@@ -888,14 +870,13 @@ def _merge(engine, sql: str) -> DataFrame:
     # simplification of Snowflake's clause-order rule).
     if dele is not None:
         extra = f" AND ({transpile(dele['extra'])})" if dele["extra"] else ""
-        observed, get_n = _obs_count(
+        del_ids, metrics = materialized(
             engine.spark.sql(
                 f"SELECT {alias}.{_RID} AS {_RID} FROM {alias}, {src_alias} "
                 f"WHERE ({on_sql}){extra}"
             ).dropDuplicates([_RID])
         )
-        del_ids = observed.localCheckpoint()
-        n_del = get_n()
+        n_del = metrics["n"]
         patched = patched.join(del_ids, _RID, "left_anti")
         cdc_parts.append(
             tgt.join(del_ids, _RID, "left_semi")
@@ -921,9 +902,8 @@ def _merge(engine, sql: str) -> DataFrame:
         ).dropDuplicates([_RID])
         if del_ids is not None:
             matches = matches.join(del_ids, _RID, "left_anti")
-        matches, get_n = _obs_count(matches)
-        matches = matches.localCheckpoint()
-        n_upd = get_n()
+        matches, metrics = materialized(matches)
+        n_upd = metrics["n"]
         cdc_parts.append(
             _update_events(engine, tgt, matches, assignments, schema)
         )
@@ -965,13 +945,12 @@ def _merge(engine, sql: str) -> DataFrame:
         )
         if ins["extra"]:
             anti = anti.filter(F.expr(transpile(ins["extra"])))
-        observed, get_n = _obs_count(
+        new_rows, metrics = materialized(
             anti.select(
                 *[F.expr(transpile(v)).alias(c) for v, c in zip(vals, cols)]
             )
         )
-        new_rows = observed.localCheckpoint()
-        n_ins = get_n()
+        n_ins = metrics["n"]
         aligned = _aligned_for_insert(engine, table, new_rows, cols)
         final = final.unionByName(aligned)
         cdc_parts.append(
@@ -1110,7 +1089,7 @@ def _ctas(engine, sql: str) -> DataFrame:
                     break
         if closes_at_end:
             body = body[1:-1]
-    df, get_n = _obs_count(engine.query(body))
+    df, get = observed(engine.query(body))
     if engine.store.exists(table):
         if not replace:
             raise ValueError(f"table already exists: {table}")
@@ -1120,7 +1099,7 @@ def _ctas(engine, sql: str) -> DataFrame:
     # One evaluation total: the write IS the only materialization; the
     # row count rides it via Observation (r16 — was a separate
     # read-back count job per CTAS).
-    return _summary(engine, rows_inserted=get_n())
+    return _summary(engine, rows_inserted=get()["n"])
 
 
 _TRUNCATE_RE = re.compile(rf"(?is)^\s*truncate\s+(?:table\s+)?({_TABLE})\s*$")
@@ -1445,12 +1424,12 @@ def _copy(engine, sql: str) -> DataFrame:
         # directory; Snowflake's stage semantics are append-only, but a
         # filesystem unload that silently mixes runs is a footgun).
         table = _resolve_table(engine, source)
-        df, get_n = _obs_count(engine.store.read(engine.spark, table))
+        df, get = observed(engine.store.read(engine.spark, table))
         writer = df.write.mode("overwrite")
         if ftype == "csv":
             writer = writer.option("header", True)
         getattr(writer, ftype)(target.strip("'"))
-        return _summary(engine, rows_unloaded=get_n())
+        return _summary(engine, rows_unloaded=get()["n"])
 
     # LOAD: files -> table (append; COPY INTO's one-way door)
     table = _resolve_table(engine, target)
@@ -1461,9 +1440,9 @@ def _copy(engine, sql: str) -> DataFrame:
         # columns positionally either way, like we do below.
         reader = reader.option("header", fmt.get("skip_header") == "1")
     df = getattr(reader, ftype)(source.strip("'"))
-    aligned, get_n = _obs_count(_aligned_for_insert(engine, table, df, None))
+    aligned, get = observed(_aligned_for_insert(engine, table, df, None))
     engine.store.append(engine.spark, table, aligned)
-    return _summary(engine, rows_loaded=get_n())
+    return _summary(engine, rows_loaded=get()["n"])
 
 
 # ---------------------------------------------------------------------------

@@ -751,13 +751,10 @@ class TableStore:
             )
         # r16: the deleted-position count rides the checkpoint's
         # materialization via Observation — no separate count job.
-        from pyspark.sql import Observation
+        from ..ops.observe import materialized
 
-        obs = Observation()
-        new_hits = matched.observe(
-            obs, F.count(F.lit(1)).cast("long").alias("n")
-        ).localCheckpoint()
-        n_new = int(obs.get["n"] or 0)
+        new_hits, metrics = materialized(matched)
+        n_new = metrics["n"]
         merged_dv = new_hits.select("relpath", "row_index")
         if old_dv is not None:
             merged_dv = merged_dv.unionByName(old_dv)

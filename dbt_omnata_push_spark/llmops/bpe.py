@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..ops.observe import materialized
+
 DEFAULT_MERGES = 8
 
 
@@ -142,26 +144,23 @@ def bpe_train(
     PageRank loop (llmops/dedup.py). Lineage boundedness is pinned by
     tests/test_curation_round5b.py (plan-size plateau test).
     """
-    # Adaptive engine choice (r6): probe the vocab size with one
-    # limit-collect job; a vocab under the driver budget trains locally
-    # (identical merges, ~10x faster — see DEFAULT_LOCAL_VOCAB_LIMIT).
-    # Pass local_vocab_limit=0 to force the distributed loop
-    # (return_state always runs distributed — it hands back a frame).
-    if local_vocab_limit and not return_state:
-        probe = (
-            words.select(word_col, freq_col)
-            .limit(local_vocab_limit + 1)
-            .collect()
+    # Driver-local or distributed by ops/observe.py's gate (identical
+    # merges, ~10x faster locally — see DEFAULT_LOCAL_VOCAB_LIMIT):
+    # both paths read the one checkpoint of the vocab, collected only
+    # when local; return_state always runs distributed (it hands back
+    # a frame).
+    vocab, metrics = materialized(words.select(word_col, freq_col))
+    if (
+        local_vocab_limit
+        and not return_state
+        and metrics["n"] <= local_vocab_limit
+    ):
+        return bpe_train_local(
+            [(r[0], int(r[1])) for r in vocab.collect()], n_merges
         )
-        if len(probe) <= local_vocab_limit:
-            return bpe_train_local(
-                [(r[0], int(r[1])) for r in probe], n_merges
-            )
-    # Persist the char-split vocab: without it every round's collect()
-    # re-executes the corpus-sized word count feeding ``words``. With
-    # the cache, the corpus is scanned once and each round replays only
-    # its (vocab-sized) rewrite chain since the last checkpoint.
-    seq = words.select(
+    # Persist the char-split vocab, so each round replays only its
+    # (vocab-sized) rewrite chain since the last checkpoint.
+    seq = vocab.select(
         word_col, freq_col, _char_seq(F.col(word_col)).alias("seq")
     ).persist()
     to_release = seq

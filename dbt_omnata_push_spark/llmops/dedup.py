@@ -14,14 +14,17 @@ DuckDB oracle reproduces them bit-for-bit).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
+from ..ops.observe import materialized, observed
+
 DEFAULT_NUM_PERM = 8
 DEFAULT_BAND_SIZE = 2
+# Edge ceiling of the driver-local CC and PageRank paths: 4M id pairs
+# is ~64 MB on the driver, the broadcast-join trade.
+LOCAL_EDGE_LIMIT = 4_000_000
 
 
 def exact_dedup_groups(
@@ -431,18 +434,35 @@ def _cc_local(pairs: DataFrame) -> DataFrame:
     return spark.createDataFrame(out, schema)
 
 
+def _edge_pairs(
+    edges: DataFrame, src: str, dst: str, local_edge_limit: int
+) -> tuple[DataFrame, bool]:
+    """The edge list as (a, b), materialized once, and whether it fits
+    the driver-local path: at most ``local_edge_limit`` edges and no
+    NULL id, read from that one job (ops/observe.py)."""
+    pairs, m = materialized(
+        edges.select(F.col(src).alias("a"), F.col(dst).alias("b")),
+        n=F.count(F.lit(1)),
+        nulls=F.count_if(F.col("a").isNull() | F.col("b").isNull()),
+    )
+    fits = m["n"] <= local_edge_limit and not m["nulls"]
+    return pairs, bool(local_edge_limit) and fits
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "doc_a",
     dst: str = "doc_b",
-    max_iter: int = 25,
-    local_edge_limit: int | None = None,
+    max_iter: int = 1000,
+    local_edge_limit: int = LOCAL_EDGE_LIMIT,
 ) -> DataFrame:
     """Min-label propagation over an undirected edge list.
 
     Returns (node, component) where component = min node id reachable.
     Each iteration is one shuffle (join on node + min-agg); convergence
-    needs O(component diameter) rounds. Three scale/latency choices
+    needs O(component diameter) rounds, and a graph still changing
+    after ``max_iter`` rounds raises instead of returning unconverged
+    labels. Three scale/latency choices
     (measured together: 3.2s -> 0.6s at sf0.1):
     - init fuses round 1: labels start at min(node, min neighbour) from
       a single aggregation, no join — near-dup clusters are stars around
@@ -458,40 +478,13 @@ def connected_components(
     GraphX/GraphFrames would give the same algorithm but pulls in an RDD
     API dependency for no gain at this shape.
     """
-    from pyspark.sql import Observation
-
-    # Materialize the mined edge list ONCE (it is read every iteration
-    # either way), riding an edge/null count on the same job. The count
-    # gates a size-adaptive execution choice (r16, guide §1.2 step 1 —
-    # the best distributed algorithm for a small intermediate is no
-    # distribution; same posture as the BPE local/distributed path):
-    # label propagation costs O(diameter) whole Spark rounds of
-    # scheduling + checkpoint overhead, while a pair graph that fits
-    # comfortably on the driver (default 4M edges ~ 64 MB of id pairs,
-    # the broadcast-join trade) resolves exactly in one vectorized
-    # numpy min-label + pointer-jumping loop. Identical fixpoint: the
-    # min reachable id per node is unique, so both paths return the
-    # same rows. The distributed path remains for real corpus-scale
-    # graphs and for edge ids containing NULLs (the driver path would
-    # have to special-case them; the safe direction is to not take it).
-    if local_edge_limit is None:
-        local_edge_limit = int(
-            os.environ.get("SPARK_GRAFT_CC_LOCAL_EDGES", "4000000")
-        )
-    eobs = Observation()
-    pairs = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .observe(
-            eobs,
-            F.count(F.lit(1)).alias("n"),
-            F.count_if(
-                F.col("a").isNull() | F.col("b").isNull()
-            ).alias("nulls"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    em = eobs.get
-    if int(em["n"] or 0) <= local_edge_limit and not int(em["nulls"] or 0):
+    # Driver-local or distributed, decided by ops/observe.py's gate
+    # (``local_edge_limit=0`` forces distributed): label propagation
+    # costs O(diameter) Spark rounds, while a driver-sized pair graph
+    # resolves exactly in one numpy min-label + pointer-jumping loop
+    # with the same fixpoint (the min reachable id per node is unique).
+    pairs, local = _edge_pairs(edges, src, dst, local_edge_limit)
+    if local:
         return _cc_local(pairs)
     # Persisted ALREADY hash-partitioned on the join key (r15, guide
     # §2.4): each round's edge⋈labels join then reuses the cached
@@ -526,47 +519,46 @@ def connected_components(
         )
         .localCheckpoint(eager=True)
     )
-    for it in range(max_iter):
-        # One job per round (r15, guide §2.4 — was: neighbour-min join +
-        # agg + a second LEFT join back to labels, ~5 exchanges): the
-        # neighbour messages UNION a tagged copy of the labels
-        # themselves, and a single grouped aggregation produces both the
-        # new label min(old, min neighbour label) and the old label (the
-        # tagged row is the unique self row per node) for the
-        # convergence metric. Identical fixpoint, identical rounds.
-        msgs = both.join(labels, both.b == labels.node).select(
-            "a", "component", F.lit(False).alias("_self")
-        )
-        obs = Observation()
-        new_labels = (
-            msgs.unionByName(
-                labels.select(
-                    F.col("node").alias("a"),
-                    "component",
-                    F.lit(True).alias("_self"),
+    try:
+        for _ in range(max_iter):
+            # One job per round (r15, guide §2.4 — was: neighbour-min
+            # join + agg + a second LEFT join back to labels, ~5
+            # exchanges): the neighbour messages UNION a tagged copy of
+            # the labels themselves, and a single grouped aggregation
+            # produces both the new label min(old, min neighbour label)
+            # and the old label (the tagged row is the unique self row
+            # per node) for the convergence metric.
+            msgs = both.join(labels, both.b == labels.node).select(
+                "a", "component", F.lit(False).alias("_self")
+            )
+            new_labels, get = observed(
+                msgs.unionByName(
+                    labels.select(
+                        F.col("node").alias("a"),
+                        "component",
+                        F.lit(True).alias("_self"),
+                    )
                 )
+                .groupBy("a")
+                .agg(
+                    F.min("component").alias("component"),
+                    F.min(
+                        F.when(F.col("_self"), F.col("component"))
+                    ).alias("_old"),
+                )
+                .select(F.col("a").alias("node"), "component", "_old"),
+                changed=F.count_if(F.col("component") != F.col("_old")),
             )
-            .groupBy("a")
-            .agg(
-                F.min("component").alias("component"),
-                F.min(F.when(F.col("_self"), F.col("component"))).alias(
-                    "_old"
-                ),
-            )
-            .select(F.col("a").alias("node"), "component", "_old")
-            .observe(
-                obs,
-                F.count_if(F.col("component") != F.col("_old")).alias("changed"),
-            )
-            .drop("_old")
-            .localCheckpoint(eager=True)  # materializes; metric rides this job
-        )
-        changed = obs.get["changed"]
-        labels = new_labels
-        if changed == 0:
-            break
-    both.unpersist()
-    return labels
+            # materializes; the metric rides this job
+            labels = new_labels.drop("_old").localCheckpoint(eager=True)
+            if not get()["changed"]:
+                return labels
+    finally:
+        both.unpersist()
+    raise RuntimeError(
+        f"connected_components: labels still changing after {max_iter} "
+        "rounds; raise max_iter above the graph's diameter"
+    )
 
 
 def incremental_dedup_against_index(
@@ -686,6 +678,7 @@ def pair_graph_pagerank(
     scale: int = 1_000_000,
     a_col: str = "doc_a",
     b_col: str = "doc_b",
+    local_edge_limit: int = LOCAL_EDGE_LIMIT,
 ) -> DataFrame:
     """Fixed-iteration PageRank over the (undirected) near-dup pair
     graph — ranks the 'hub' documents of duplicate neighborhoods (the
@@ -699,32 +692,10 @@ def pair_graph_pagerank(
     lineage is truncated per round with localCheckpoint, same as
     connected_components. Nodes are pair members only; deg >= 1 always.
     """
-    from pyspark.sql import Observation
-
-    # Size-adaptive execution (r16, same gate and rationale as
-    # connected_components): the recurrence is INTEGER arithmetic
-    # (div/sum on BIGINT), which numpy int64 reproduces bit-exactly,
-    # so a driver-sized pair graph runs all iterations in vectorized
-    # numpy instead of iters Spark rounds of join+agg+checkpoint. The
-    # mined pairs materialize once either way; NULL ids or a big graph
-    # keep the distributed rounds.
-    local_limit = int(
-        os.environ.get("SPARK_GRAFT_CC_LOCAL_EDGES", "4000000")
-    )
-    pobs = Observation()
-    pairs = (
-        pairs.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
-        .observe(
-            pobs,
-            F.count(F.lit(1)).alias("n"),
-            F.count_if(
-                F.col("a").isNull() | F.col("b").isNull()
-            ).alias("nulls"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    pm = pobs.get
-    if int(pm["n"] or 0) <= local_limit and not int(pm["nulls"] or 0):
+    # Driver-local or distributed, the connected_components gate: the
+    # BIGINT recurrence is reproduced bit-exactly by numpy int64.
+    pairs, local = _edge_pairs(pairs, a_col, b_col, local_edge_limit)
+    if local:
         return _pagerank_local(pairs, iters, scale)
     # Both edge directions come from ONE evaluation of the (possibly
     # expensive) pairs input via explode — a union of two selects would
@@ -795,8 +766,6 @@ def pair_graph_pagerank_converged(
     stays the oracle mode — a deterministic iteration count is what
     makes the result expressible as unrolled SQL CTEs.
     """
-    from pyspark.sql import Observation
-
     if tol is None:
         tol = max(1, scale // 10_000)
     edges = (
@@ -831,27 +800,21 @@ def pair_graph_pagerank_converged(
             .groupBy("dst")
             .agg(F.sum("c").alias("c"))
         )
-        obs = Observation()
-        new_ranks = (
-            ranks.join(contrib, ranks.node == contrib.dst, "left")
-            .select(
+        new_ranks, get = observed(
+            ranks.join(contrib, ranks.node == contrib.dst, "left").select(
                 "node",
                 "deg",
                 F.col("rank").alias("_old"),
                 (F.lit(base) + F.expr("(85 * coalesce(c, 0)) div 100"))
                 .cast("long")
                 .alias("rank"),
-            )
-            .observe(
-                obs, F.max(F.abs(F.col("rank") - F.col("_old"))).alias("delta")
-            )
-            .drop("_old")
-            .localCheckpoint(eager=True)  # metric rides this job
+            ),
+            delta=F.max(F.abs(F.col("rank") - F.col("_old"))),
         )
+        # metric rides this job
+        ranks = new_ranks.drop("_old").localCheckpoint(eager=True)
         rounds += 1
-        delta = obs.get["delta"]
-        ranks = new_ranks
-        if delta is None or delta <= tol:
+        if get()["delta"] <= tol:
             break
     edges.unpersist()
     return ranks.select(F.col("node").alias("doc_id"), F.col("rank")), rounds

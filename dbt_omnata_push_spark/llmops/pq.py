@@ -43,6 +43,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..ops.observe import materialized
+
 
 def pq_train(
     emb: DataFrame,
@@ -77,19 +79,11 @@ def pq_train(
     import numpy as np
     import pandas as pd
 
-    # ONE bounded action decides the adaptive path AND feeds the local
-    # loop (r16, guide §1.2 — was: init collect + count + data collect
-    # = 3 driver jobs before any training): collect up to limit+1
-    # (id, vec) rows; fitting under the budget IS the old count gate,
-    # and the k lowest-id init rows fall out of a numpy sort. The
-    # distributed path keeps its own orderBy-init collect (its probe
-    # rows are an arbitrary subset, not the lowest ids).
-    probe = (
-        emb.select(id_col, vec_col).limit(local_vector_limit + 1).collect()
-        if local_vector_limit
-        else []
-    )
-    if local_vector_limit and len(probe) <= local_vector_limit:
+    # Driver-local or distributed by ops/observe.py's gate: both paths
+    # read the one checkpoint of (id, vec), collected only when local.
+    pts, metrics = materialized(emb.select(id_col, vec_col))
+    if local_vector_limit and metrics["n"] <= local_vector_limit:
+        probe = pts.collect()
         if len(probe) < k:
             raise ValueError(f"need >= {k} vectors to init {k} codes")
         dim = len(probe[0][1])
@@ -100,8 +94,8 @@ def pq_train(
             [np.asarray(r[1], dtype="float64") for r in probe]
         )
         # mat keeps COLLECT order (np.mean sums per-code rows in row
-        # order — keep it stable vs the prior data collect); only the
-        # init picks the k lowest-id rows, ascending, like orderBy.
+        # order); only the init picks the k lowest-id rows, ascending,
+        # like orderBy.
         order = np.argsort(
             np.asarray([r[0] for r in probe]), kind="stable"
         )
@@ -119,7 +113,7 @@ def pq_train(
                     books[j, code] = mat[mask, j, :].mean(axis=0)
         return [[list(map(float, c)) for c in books[j]] for j in range(m)]
 
-    init = emb.orderBy(id_col).limit(k).select(vec_col).collect()
+    init = pts.orderBy(id_col).limit(k).select(vec_col).collect()
     if len(init) < k:
         raise ValueError(f"need >= {k} vectors to init {k} codes")
     dim = len(init[0][0])
@@ -139,71 +133,68 @@ def pq_train(
         ]
     )
 
-    src = emb.select(vec_col).persist()
+    src = pts.select(vec_col)
     n_parts = src.rdd.getNumPartitions()
-    try:
-        for _ in range(max_iter):
-            b = books
-            b_sq = (b ** 2).sum(axis=2)  # m x k
+    for _ in range(max_iter):
+        b = books
+        b_sq = (b ** 2).sum(axis=2)  # m x k
 
-            def partials(batches, b=b, b_sq=b_sq):
-                for pdf in batches:
-                    if not len(pdf):
-                        continue
-                    mat = np.stack(pdf[vec_col].to_numpy()).astype("float64")
-                    parts = mat.reshape(len(mat), m, sub)
-                    cross = np.einsum("nms,mks->nmk", parts, b)
-                    codes = (b_sq[None, :, :] - 2.0 * cross).argmin(axis=2)
-                    out = {"j": [], "code": [], "cnt": [], "sums": []}
-                    for j in range(m):
-                        cj = codes[:, j]
-                        for code in np.unique(cj):
-                            mask = cj == code
-                            out["j"].append(j)
-                            out["code"].append(int(code))
-                            out["cnt"].append(int(mask.sum()))
-                            out["sums"].append(parts[mask, j, :].sum(axis=0))
-                    yield pd.DataFrame(out)
+        def partials(batches, b=b, b_sq=b_sq):
+            for pdf in batches:
+                if not len(pdf):
+                    continue
+                mat = np.stack(pdf[vec_col].to_numpy()).astype("float64")
+                parts = mat.reshape(len(mat), m, sub)
+                cross = np.einsum("nms,mks->nmk", parts, b)
+                codes = (b_sq[None, :, :] - 2.0 * cross).argmin(axis=2)
+                out = {"j": [], "code": [], "cnt": [], "sums": []}
+                for j in range(m):
+                    cj = codes[:, j]
+                    for code in np.unique(cj):
+                        mask = cj == code
+                        out["j"].append(j)
+                        out["code"].append(int(code))
+                        out["cnt"].append(int(mask.sum()))
+                        out["sums"].append(parts[mask, j, :].sum(axis=0))
+                yield pd.DataFrame(out)
 
-            raw = src.mapInPandas(partials, part_schema)
-            # Each batch pre-reduces to <= m*k rows, so the global
-            # reduce is over #batches * m * k rows. When that frame is
-            # collect-sized (true on any single-machine run and on
-            # clusters up to ~200 input partitions at m=16,k=64) the
-            # per-iteration shuffle+agg round trip costs more in job
-            # scheduling than the reduction itself — fold driver-side
-            # in numpy instead (measured 7.3s -> ~3s for 4 iterations
-            # at sf0.1). Bigger inputs keep the distributed map-side-
-            # partial groupBy, which is the 100 TB shape.
-            cnt_acc = np.zeros((m, k), dtype="int64")
-            sum_acc = np.zeros((m, k, sub), dtype="float64")
-            if n_parts * m * k <= 250_000:
-                for r in raw.collect():
-                    cnt_acc[r["j"], r["code"]] += r["cnt"]
-                    sum_acc[r["j"], r["code"]] += np.asarray(r["sums"])
-            else:
-                stats = (
-                    raw.groupBy("j", "code")
-                    .agg(
-                        F.sum("cnt").alias("n"),
-                        *[
-                            F.sum(F.col("sums")[i]).alias(f"s{i}")
-                            for i in range(sub)
-                        ],
-                    )
-                    .collect()
+        raw = src.mapInPandas(partials, part_schema)
+        # Each batch pre-reduces to <= m*k rows, so the global
+        # reduce is over #batches * m * k rows. When that frame is
+        # collect-sized (true on any single-machine run and on
+        # clusters up to ~200 input partitions at m=16,k=64) the
+        # per-iteration shuffle+agg round trip costs more in job
+        # scheduling than the reduction itself — fold driver-side
+        # in numpy instead (measured 7.3s -> ~3s for 4 iterations
+        # at sf0.1). Bigger inputs keep the distributed map-side-
+        # partial groupBy, which is the 100 TB shape.
+        cnt_acc = np.zeros((m, k), dtype="int64")
+        sum_acc = np.zeros((m, k, sub), dtype="float64")
+        if n_parts * m * k <= 250_000:
+            for r in raw.collect():
+                cnt_acc[r["j"], r["code"]] += r["cnt"]
+                sum_acc[r["j"], r["code"]] += np.asarray(r["sums"])
+        else:
+            stats = (
+                raw.groupBy("j", "code")
+                .agg(
+                    F.sum("cnt").alias("n"),
+                    *[
+                        F.sum(F.col("sums")[i]).alias(f"s{i}")
+                        for i in range(sub)
+                    ],
                 )
-                for r in stats:
-                    cnt_acc[r["j"], r["code"]] = r["n"]
-                    sum_acc[r["j"], r["code"]] = [
-                        r[f"s{i}"] for i in range(sub)
-                    ]
-            new_books = books.copy()  # empty codes keep their centroid
-            nz = cnt_acc > 0
-            new_books[nz] = sum_acc[nz] / cnt_acc[nz][:, None]
-            books = new_books
-    finally:
-        src.unpersist()
+                .collect()
+            )
+            for r in stats:
+                cnt_acc[r["j"], r["code"]] = r["n"]
+                sum_acc[r["j"], r["code"]] = [
+                    r[f"s{i}"] for i in range(sub)
+                ]
+        new_books = books.copy()  # empty codes keep their centroid
+        nz = cnt_acc > 0
+        new_books[nz] = sum_acc[nz] / cnt_acc[nz][:, None]
+        books = new_books
     return [[list(map(float, c)) for c in books[j]] for j in range(m)]
 
 

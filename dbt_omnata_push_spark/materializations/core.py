@@ -5,8 +5,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..engine.dag import RunResult
-from ..engine.dml import _obs_count
 from ..engine.model import Context
+from ..ops.observe import materialized, observed
 
 
 def materialize_view(engine, model) -> RunResult:
@@ -16,15 +16,11 @@ def materialize_view(engine, model) -> RunResult:
 
 
 def materialize_table(engine, model) -> RunResult:
-    df = engine.build_df(model)
+    """``rows_affected`` is the number of rows written, counted on the
+    write."""
+    df, get = observed(engine.build_df(model))
     engine.store.overwrite(engine.spark, model.name, df)
-    n = engine.store.read(engine.spark, model.name).count()
-    engine._publish(
-        model.name,
-        engine.store.read(engine.spark, model.name),
-        nonstore=False,
-    )
-    return RunResult(model.name, "success", rows_affected=n)
+    return _published(engine, model, get()["n"])
 
 
 def materialize_incremental(engine, model) -> RunResult:
@@ -47,18 +43,19 @@ def materialize_incremental(engine, model) -> RunResult:
     batch's one checkpoint, so it costs no extra Spark job.
     """
     ctx = Context(engine, model)
-    df, get_n = _obs_count(engine.build_df(model))
+    df = engine.build_df(model)
     strategy = model.config.get("incremental_strategy")
     if not ctx.is_incremental():
+        df, get = observed(df)
         engine.store.overwrite(
             engine.spark, model.name, df,
             partition_by=model.config.get("partition_by"),
         )
-        return _published(engine, model, get_n())
+        return _published(engine, model, get()["n"])
     # The batch is evaluated once: its checkpoint feeds both the
     # emptiness test and the commit.
-    df = df.localCheckpoint()
-    n = get_n()
+    df, metrics = materialized(df)
+    n = metrics["n"]
     if n == 0:
         # Empty incremental delta: commit NOTHING (r12). A 0-row
         # append/merge would still cut a new table version, so every
@@ -101,9 +98,11 @@ def materialize_tracking_table(engine, model) -> RunResult:
         widening (lines 28-35)
     Full refresh obeys var 'drop-omnata-task-tables', NOT --full-refresh
     (line 5) — the tables must survive a normal full refresh.
+    ``rows_affected`` is the number of rows written (CTAS or upserted),
+    counted on the write.
     """
     drop_var = bool(engine.vars.get("drop-omnata-task-tables", False))
-    df = engine.build_df(model)
+    df, get = observed(engine.build_df(model))
     if not engine.store.exists(model.name) or drop_var:
         from . import tracking as _tracking
 
@@ -120,9 +119,7 @@ def materialize_tracking_table(engine, model) -> RunResult:
         if not key:
             raise ValueError(f"tracking_table {model.name} requires unique_key")
         engine.store.merge_upsert(engine.spark, model.name, df, key)
-    out = engine.store.read(engine.spark, model.name)
-    engine._publish(model.name, out, nonstore=False)
-    return RunResult(model.name, "success", rows_affected=out.count())
+    return _published(engine, model, get()["n"])
 
 
 def high_watermark_incremental(ctx: Context, df, watermark_col: str):

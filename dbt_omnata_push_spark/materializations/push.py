@@ -31,9 +31,9 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..connectors.base import get_connector
 from ..engine.dag import RunResult
-from ..engine.dml import _obs_count
 from ..ops.batching import DEFAULT_BATCH_SIZE
 from ..ops.gpg import encrypt_batch, gpg_session_params, json_records_to_csv
+from ..ops.observe import materialized
 from ..ops.retry import RetryPolicy
 from ..ops.rownum import with_global_index
 from . import tracking
@@ -104,11 +104,10 @@ def _salesforce_bulk_load(engine, model, records: DataFrame, legacy=False) -> Ru
     # empty-load short-circuit (salesforce.sql:5-18 / load_task:11-25).
     # The index is partition-local, not dense: it only has to be unique
     # and stable, and once checkpointed it is both.
-    indexed, get_n = _obs_count(
+    indexed, metrics = materialized(
         records.withColumn("row_idx", F.monotonically_increasing_id())
     )
-    indexed = indexed.localCheckpoint()
-    n = get_n()
+    n = metrics["n"]
     if n == 0 and not engine.vars.get("full-refresh-salesforce", False):
         return RunResult(model.name, "skipped", message="empty load, no-op")
 

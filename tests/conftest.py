@@ -98,25 +98,15 @@ def pytest_collection_modifyitems(config, items):
 
 @pytest.fixture(scope="session")
 def spark():
-    extra = {
-        "spark.ui.enabled": "false",
-        "spark.sql.warehouse.dir": "/tmp/sg-warehouse",
-    }
-    # r16 experiment knobs (wall-time tuning of the shared session;
-    # production defaults in engine/session.py are untouched)
-    if os.environ.get("SPARK_GRAFT_TEST_AQE"):
-        extra["spark.sql.adaptive.enabled"] = os.environ[
-            "SPARK_GRAFT_TEST_AQE"
-        ]
-    s = get_spark(
+    yield get_spark(
         app_name="tests",
         master="local[8]",
-        shuffle_partitions=int(
-            os.environ.get("SPARK_GRAFT_TEST_SHUFFLE", "8")
-        ),
-        extra_conf=extra,
+        shuffle_partitions=8,
+        extra_conf={
+            "spark.ui.enabled": "false",
+            "spark.sql.warehouse.dir": "/tmp/sg-warehouse",
+        },
     )
-    yield s
 
 
 @pytest.fixture(scope="session")

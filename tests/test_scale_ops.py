@@ -187,8 +187,6 @@ def test_connected_components_local_equals_distributed(spark):
     from dbt_omnata_push_spark.llmops.dedup import connected_components
 
     rng = random.Random(7)
-    # chain depth stays under the distributed path's max_iter bound
-    # (the local path is exact at any diameter)
     edges = [(i, i + 1) for i in range(0, 20)]  # one long chain
     edges += [(100, 100 + k) for k in range(1, 9)]  # star
     edges += [
@@ -240,16 +238,10 @@ def test_pagerank_local_equals_distributed(spark):
         (r["doc_id"], r["rank"])
         for r in pair_graph_pagerank(df, iters=3).collect()
     }
-    import os as _os
-
-    _os.environ["SPARK_GRAFT_CC_LOCAL_EDGES"] = "0"
-    try:
-        dist = {
-            (r["doc_id"], r["rank"])
-            for r in pair_graph_pagerank(df, iters=3).collect()
-        }
-    finally:
-        del _os.environ["SPARK_GRAFT_CC_LOCAL_EDGES"]
+    dist = {
+        (r["doc_id"], r["rank"])
+        for r in pair_graph_pagerank(df, iters=3, local_edge_limit=0).collect()
+    }
     assert local == dist and len(local) > 0
 
 

@@ -1,13 +1,10 @@
-"""File sources/sinks + dbt-style generic tests."""
+"""File sources and sinks."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from dbt_omnata_push_spark.engine.dag import Engine
-from dbt_omnata_push_spark.engine.store import TableStore
-from dbt_omnata_push_spark.engine.tests_generic import run_generic_tests
 from dbt_omnata_push_spark.sources import read_source, write_sink
 
 
@@ -43,36 +40,6 @@ def test_streaming_read_requires_schema(spark, tmp_path):
 def test_unknown_format_rejected(spark):
     with pytest.raises(ValueError, match="unsupported source format"):
         read_source(spark, "/nowhere", fmt="avro")
-
-
-def test_generic_tests(spark, tmp_path):
-    engine = Engine(spark, TableStore(str(tmp_path)))
-    engine.store.create(
-        spark,
-        "child",
-        spark.createDataFrame(
-            [(1, "ok", 10), (2, "ok", 10), (3, None, 99), (3, "bad", None)],
-            "id int, status string, parent_id int",
-        ),
-    )
-    engine.store.create(
-        spark, "parent", spark.createDataFrame([(10,), (11,)], "pid int")
-    )
-    results = run_generic_tests(
-        engine,
-        "child",
-        {
-            "id": ["unique"],
-            "status": ["not_null", {"accepted_values": ["ok"]}],
-            "parent_id": [{"relationships": ("parent", "pid")}],
-        },
-    )
-    assert results == {
-        "child.id.unique": 1,  # id 3 duplicated
-        "child.status.not_null": 1,
-        "child.status.accepted_values": 2,  # null + 'bad'
-        "child.parent_id.relationships": 1,  # 99 has no parent
-    }
 
 
 def test_python_datasource_partitioned_read(spark):
