@@ -307,7 +307,6 @@ _POST_R8_ADDITIONS = {
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or "0.1")
     # Optional subset (r13): comma-separated query names for quick
     # iteration and targeted A/B runs. A filtered run records
@@ -322,9 +321,10 @@ def main() -> None:
             print(f"# not in HEADLINE (skipped): {sorted(missing)}",
                   file=sys.stderr)
 
-    from dbt_omnata_push_spark.engine.session import get_spark
+    from dbt_omnata_push_spark.engine.session import get_spark, local_cores
     from dbt_omnata_push_spark.queries import load_all
 
+    cpus = local_cores()
     # Local mode runs executors inside the driver JVM: Spark's 1g default
     # heap on a 128 GiB box means constant GC at sf0.1. Size the heap to
     # the machine (recorded in the output config block).

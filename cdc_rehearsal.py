@@ -30,10 +30,10 @@ def main() -> None:
     args = ap.parse_args()
 
     from dbt_omnata_push_spark.engine.dag import Engine
-    from dbt_omnata_push_spark.engine.session import get_spark
+    from dbt_omnata_push_spark.engine.session import get_spark, local_cores
     from dbt_omnata_push_spark.engine.store import TableStore
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = local_cores()
     spark = get_spark(
         app_name="cdc_rehearsal",
         master=f"local[{cpus}]",

@@ -18,6 +18,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 
 from .model import Context, Model
+from .session import local_frame
 from .store import TableStore
 
 
@@ -712,7 +713,8 @@ class Engine:
             th_df = hit[1]
         else:
             th = self.store.task_history()
-            th_df = self.spark.createDataFrame(
+            th_df = local_frame(
+                self.spark,
                 [
                     (
                         r.get("name"),
@@ -743,7 +745,8 @@ class Engine:
             dth_df = hit[1]
         else:
             dth = self.store.dt_refresh_history()
-            dth_df = self.spark.createDataFrame(
+            dth_df = local_frame(
+                self.spark,
                 [
                     (
                         r.get("name"),
@@ -1248,8 +1251,8 @@ class Engine:
                 continue
             _record(i, n, "success")
         self.store.append_task_history(hist)
-        return self.spark.createDataFrame(
-            rows, "run_order int, task_name string, status string"
+        return local_frame(
+            self.spark, rows, "run_order int, task_name string, status string"
         )
 
     def _resolve_stream_has_data(self, when: str) -> str:
@@ -1351,7 +1354,8 @@ class Engine:
                     continue
             status = self.refresh_dynamic_table(name, now=now)
             out.append((name, 0, name, f"dt_{status}"))
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             out,
             "root string, run_order int, task_name string, status string",
         )

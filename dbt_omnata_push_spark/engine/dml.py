@@ -49,6 +49,7 @@ import re
 from pyspark.sql import DataFrame, functions as F
 
 from ..ops.observe import materialized, observed
+from .session import local_frame
 from .sqlfront import _split_top_level_args, transpile
 
 # ---------------------------------------------------------------------------
@@ -288,7 +289,7 @@ def _refuse_dynamic(engine, table: str, verb: str) -> None:
 
 def _summary(engine, **counts) -> DataFrame:
     cols = ", ".join(f"{k} long" for k in counts)
-    return engine.spark.createDataFrame([tuple(counts.values())], cols)
+    return local_frame(engine.spark, [tuple(counts.values())], cols)
 
 
 def _run_select(engine, body: str) -> DataFrame:
@@ -514,8 +515,8 @@ def _insert_multi(engine, sql: str) -> DataFrame:
             )
             engine.store.append(engine.spark, table, aligned)
             results[table] = results.get(table, 0) + get()["n"]
-    return engine.spark.createDataFrame(
-        sorted(results.items()), "table string, rows_inserted long"
+    return local_frame(
+        engine.spark, sorted(results.items()), "table string, rows_inserted long"
     )
 
 
@@ -1146,8 +1147,8 @@ def _show(engine, sql: str) -> DataFrame:
             for n, p in engine.store.policies().items()
             if p.get("kind") == "masking"
         )
-        return engine.spark.createDataFrame(
-            rows, "name string, param string, returns string, body string"
+        return local_frame(
+            engine.spark, rows, "name string, param string, returns string, body string"
         )
     if _SHOW_RA_POLICIES_RE.match(s):
         rows = sorted(
@@ -1159,8 +1160,8 @@ def _show(engine, sql: str) -> DataFrame:
             for n, p in engine.store.policies().items()
             if p.get("kind") == "row_access"
         )
-        return engine.spark.createDataFrame(
-            rows, "name string, signature string, body string"
+        return local_frame(
+            engine.spark, rows, "name string, signature string, body string"
         )
     m = _SHOW_COLUMNS_RE.match(s)
     if m:
@@ -1186,7 +1187,8 @@ def _show(engine, sql: str) -> DataFrame:
             )
             for i, f in enumerate(df.schema.fields)
         ]
-        return engine.spark.createDataFrame(
+        return local_frame(
+            engine.spark,
             rows,
             "table_name string, column_name string, ordinal int, "
             "data_type string, nullable boolean, masking_policy string, "
@@ -1197,24 +1199,22 @@ def _show(engine, sql: str) -> DataFrame:
             (n, st["table"], st["offset"])
             for n, st in engine.store.streams().items()
         )
-        return engine.spark.createDataFrame(
-            rows, "name string, table_name string, offset long"
+        return local_frame(
+            engine.spark, rows, "name string, table_name string, offset long"
         )
     if _SHOW_VARIABLES_RE.match(s):
         rows = sorted(
             (n, str(v), type(v).__name__)
             for n, v in engine.session_vars.items()
         )
-        return engine.spark.createDataFrame(
-            rows, "name string, value string, type string"
+        return local_frame(
+            engine.spark, rows, "name string, value string, type string"
         )
     if _SHOW_VIEWS_RE.match(s):
         rows = sorted(
             (n, v["sql"]) for n, v in engine.store.views().items()
         )
-        return engine.spark.createDataFrame(
-            rows, "name string, definition string"
-        )
+        return local_frame(engine.spark, rows, "name string, definition string")
     if _SHOW_DTS_RE.match(s):
         rows = sorted(
             (
@@ -1228,7 +1228,8 @@ def _show(engine, sql: str) -> DataFrame:
             )
             for n, d in engine.store.dynamic_tables().items()
         )
-        return engine.spark.createDataFrame(
+        return local_frame(
+            engine.spark,
             rows,
             "name string, state string, target_lag string, "
             "last_refresh string, definition string",
@@ -1246,7 +1247,8 @@ def _show(engine, sql: str) -> DataFrame:
             )
             for n, t in engine.store.tasks().items()
         )
-        return engine.spark.createDataFrame(
+        return local_frame(
+            engine.spark,
             rows,
             "name string, state string, after string, schedule string, "
             "condition string, definition string, last_run string",
@@ -1256,7 +1258,8 @@ def _show(engine, sql: str) -> DataFrame:
             (n, sq["start"], sq["increment"], sq["counter"])
             for n, sq in engine.store.sequences().items()
         )
-        return engine.spark.createDataFrame(
+        return local_frame(
+            engine.spark,
             rows,
             "name string, start long, increment long, next_value long",
         )
@@ -1275,8 +1278,10 @@ def _show(engine, sql: str) -> DataFrame:
                     rows.append(
                         (logical, pk["name"], ", ".join(pk["columns"]))
                     )
-        return engine.spark.createDataFrame(
-            rows, "table_name string, constraint_name string, columns string"
+        return local_frame(
+            engine.spark,
+            rows,
+            "table_name string, constraint_name string, columns string",
         )
     if not _SHOW_RE.match(s):
         raise ValueError(f"unsupported SHOW statement: {s[:80]}")
@@ -1299,7 +1304,8 @@ def _show(engine, sql: str) -> DataFrame:
     for name in sorted(engine.seeds):
         prior = by_name.get(name)
         by_name[name] = (name, "seed", None, prior[3] if prior else None)
-    return engine.spark.createDataFrame(
+    return local_frame(
+        engine.spark,
         sorted(by_name.values()),
         "name string, kind string, partition_by string, version long",
     )
@@ -1315,7 +1321,8 @@ def _describe(engine, sql: str) -> DataFrame:
         return engine.store.history(engine.spark, table)
     pcol = engine.store.partition_by(table)
     df = engine.store.read(engine.spark, table)
-    return engine.spark.createDataFrame(
+    return local_frame(
+        engine.spark,
         [
             (
                 f.name,
@@ -1360,7 +1367,7 @@ def _optimize(engine, sql: str) -> DataFrame:
         else None
     )
     n_files = compact(engine.spark, engine.store, table, zorder_by=zcols)
-    return engine.spark.createDataFrame([(n_files,)], "num_files long")
+    return local_frame(engine.spark, [(n_files,)], "num_files long")
 
 
 def _vacuum(engine, sql: str) -> DataFrame:
@@ -1373,9 +1380,7 @@ def _vacuum(engine, sql: str) -> DataFrame:
     before = len(engine.store.versions(table))
     engine.store.vacuum(table, retain_hours=retain)
     after = len(engine.store.versions(table))
-    return engine.spark.createDataFrame(
-        [(before - after,)], "versions_removed long"
-    )
+    return local_frame(engine.spark, [(before - after,)], "versions_removed long")
 
 
 def _restore(engine, sql: str) -> DataFrame:
@@ -1385,7 +1390,7 @@ def _restore(engine, sql: str) -> DataFrame:
         raise ValueError(f"unparsable RESTORE statement: {s[:80]}")
     table = _resolve_table(engine, m.group(1))
     new_v = engine.store.restore(table, int(m.group(2)))
-    return engine.spark.createDataFrame([(new_v,)], "restored_as_version long")
+    return local_frame(engine.spark, [(new_v,)], "restored_as_version long")
 
 
 # ---------------------------------------------------------------------------
@@ -2227,8 +2232,8 @@ def _alter_dynamic(engine, sql: str) -> DataFrame:
     verb = m.group(2).lower()
     if verb == "refresh":
         status = engine.refresh_dynamic_table(name)
-        return engine.spark.createDataFrame(
-            [(name.lower(), status)], "name string, status string"
+        return local_frame(
+            engine.spark, [(name.lower(), status)], "name string, status string"
         )
     engine.store.set_dynamic_table_state(
         name, "started" if verb == "resume" else "suspended"

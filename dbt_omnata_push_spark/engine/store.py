@@ -45,6 +45,8 @@ from pyspark.sql.types import StructField, StructType
 
 import threading as _threading
 
+from .session import local_frame
+
 # Re-entrancy registry for TableStore._write_lock: flock blocks when the
 # SAME process re-locks a file through a second descriptor, so nested
 # public calls (overwrite -> create) must recognize a lock they already
@@ -895,7 +897,8 @@ class TableStore:
                         # mid-append (the log write is best-effort, see
                         # _set_version) must not poison history forever.
                         continue
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(r["version"], r["op"], float(r["ts_unix"])) for r in rows],
             "version long, op string, ts_unix double",
         ).orderBy(F.desc("version"))

@@ -31,6 +31,7 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..connectors.base import get_connector
 from ..engine.dag import RunResult
+from ..engine.session import local_frame
 from ..ops.batching import DEFAULT_BATCH_SIZE
 from ..ops.gpg import encrypt_batch, gpg_session_params, json_records_to_csv
 from ..ops.observe import materialized
@@ -125,7 +126,8 @@ def _salesforce_bulk_load(engine, model, records: DataFrame, legacy=False) -> Ru
     # (salesforce_bulk_load.sql:21-31).
     tasks_tbl = tracking.ensure_tracking_table(engine, tracking.SFDC_LOAD_TASKS)
     spark = engine.spark
-    task_row = spark.createDataFrame(
+    task_row = local_frame(
+        spark,
         [
             (
                 job_id,
@@ -204,8 +206,10 @@ def _salesforce_bulk_load(engine, model, records: DataFrame, legacy=False) -> Ru
 
     # (4) close job + UPDATE...FROM (salesforce_bulk_load.sql:51-56).
     close_meta = connector.close_job(job_id)
-    patch = spark.createDataFrame(
-        [(job_id, json.dumps(close_meta))], "job_id string, close_metadata string"
+    patch = local_frame(
+        spark,
+        [(job_id, json.dumps(close_meta))],
+        "job_id string, close_metadata string",
     )
     engine.store.update_from(
         spark, tasks_tbl, patch, "job_id", ["close_metadata"]
@@ -343,7 +347,8 @@ def _marketing_cloud_upload(engine, model, records: DataFrame) -> RunResult:
     logs_tbl = tracking.ensure_tracking_table(
         engine, tracking.SFMC_LOAD_TASK_LOGS
     )
-    task_row = spark.createDataFrame(
+    task_row = local_frame(
+        spark,
         [
             (
                 job_id,

@@ -9,6 +9,8 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql.types import StringType, StructField, StructType, TimestampType
 
+from ..engine.session import local_frame
+
 SFDC_LOAD_TASKS = "sfdc_load_tasks"
 SFDC_LOAD_TASK_LOGS = "sfdc_load_task_logs"
 SFMC_LOAD_TASKS = "sfmc_load_tasks"
@@ -123,7 +125,7 @@ def ensure_tracking_table(engine, name: str) -> str:
         engine.store.create(
             spark,
             store_name,
-            spark.createDataFrame([], SCHEMAS[name]),
+            local_frame(spark, [], SCHEMAS[name]),
             partition_by=PARTITION_BY.get(name),
         )
     return store_name

@@ -1,12 +1,8 @@
 """Sampling operators for corpus curation.
 
-Two shapes:
-- deterministic stratified top-n: reproducible across engines and runs
-  (hash-ordered, no RNG state), the right default for dataset curation
-  where a sample must be re-derivable from the data alone;
-- proportional random sample: Spark-native Bernoulli sampling per
-  stratum (sampleBy) for quick statistical work where exact
-  reproducibility across engines doesn't matter.
+Every sampler here is deterministic: hash-ordered, no RNG state, so a
+sample is reproducible across engines and runs and re-derivable from
+the data alone, which dataset curation needs.
 
 At scale the stratified top-n is a per-stratum window (WindowGroupLimit
 pushes the rank filter below the sort), so no stratum ever needs more
@@ -35,13 +31,6 @@ def stratified_sample_deterministic(
         .filter(F.col("__rk") <= n_per_stratum)
         .drop("__rk")
     )
-
-
-def proportional_sample(
-    df: DataFrame, stratum_col: str, fractions: dict, seed: int = 42
-) -> DataFrame:
-    """Per-stratum Bernoulli sample (Spark-native sampleBy)."""
-    return df.sampleBy(stratum_col, fractions, seed)
 
 
 def deterministic_mixture(

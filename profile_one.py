@@ -51,7 +51,7 @@ def main() -> None:
     reps = int(os.environ.get("PROFILE_REPS", "2"))
 
     from dbt_omnata_push_spark.engine import dag, store
-    from dbt_omnata_push_spark.engine.session import get_spark
+    from dbt_omnata_push_spark.engine.session import get_spark, local_cores
     from dbt_omnata_push_spark.queries import load_all
 
     _instrument(
@@ -68,7 +68,7 @@ def main() -> None:
         ["query", "seed", "refresh_dynamic_table", "_register_views"],
     )
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = local_cores()
     spark = get_spark(
         app_name=f"profile-{name}",
         master=f"local[{cpus}]",

@@ -319,10 +319,10 @@ def main() -> None:
     args = ap.parse_args()
     selected = args.queries.split(",") if args.queries else QUERIES
 
-    from dbt_omnata_push_spark.engine.session import get_spark
+    from dbt_omnata_push_spark.engine.session import get_spark, local_cores
     from dbt_omnata_push_spark.queries import load_all
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = local_cores()
     spark = get_spark(
         app_name="scale_rehearsal",
         master=f"local[{cpus}]",

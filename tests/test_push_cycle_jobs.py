@@ -29,8 +29,10 @@ NAMESPACE = "push_cycle_jobs"
 # Spark jobs, shuffle and broadcast stages included, of one non-empty
 # cycle: the daily model's watermark scan, batch checkpoint and append;
 # the push's records checkpoint, task-row append, push checkpoint and
-# log append; the closing update_from.
-CYCLE_JOBS = 16
+# log append; the closing update_from. The task row and the close patch
+# are LocalRelations (engine.session.local_frame): reading them launches
+# no job of its own.
+CYCLE_JOBS = 15
 # One empty cycle: the watermark scan and the two checkpoints that find
 # no rows.
 EMPTY_CYCLE_JOBS = 5
