@@ -556,30 +556,24 @@ def _update_fast_path(engine, table, alias, assignments, cond):
             tgt, n_hit=F.sum(F.when(pred, 1).otherwise(0)).cast("long")
         )
         plan = plan.select(*cols)
-        # Change manifest (r10): pre/post of matched rows where any
-        # value actually changed — a pushed-down filtered scan, O(hit)
-        # output. Raw events; the reader's key/digest semantics apply
-        # at CDC composition time (store._compose_changes).
-        post_cols = [
-            set_map[f.name.lower()].cast(f.dataType).alias(f.name)
-            if f.name.lower() in set_map
-            else F.col(f.name)
-            for f in tgt.schema
-        ]
-        names = [f.name for f in tgt.schema]
-        paired = tgt.filter(pred).select(
-            F.struct(*[F.col(c) for c in names]).alias("_pre"),
-            F.struct(*post_cols).alias("_post"),
-        ).filter(~F.col("_pre").eqNullSafe(F.col("_post")))
-        events = (
-            paired.select("_pre.*")
-            .withColumn("change_type", F.lit("update_preimage"))
-            .unionByName(
-                paired.select("_post.*").withColumn(
-                    "change_type", F.lit("update_postimage")
-                )
-            )
-        )
+        events = None
+        if engine.store.change_tracking(table):
+            # Change manifest (r10): pre/post of matched rows where any
+            # value actually changed — a pushed-down filtered scan, O(hit)
+            # output. Raw events; the reader's key/digest semantics apply
+            # at CDC composition time (store._compose_changes).
+            post_cols = [
+                set_map[f.name.lower()].cast(f.dataType).alias(f.name)
+                if f.name.lower() in set_map
+                else F.col(f.name)
+                for f in tgt.schema
+            ]
+            names = [f.name for f in tgt.schema]
+            paired = tgt.filter(pred).select(
+                F.struct(*[F.col(c) for c in names]).alias("_pre"),
+                F.struct(*post_cols).alias("_post"),
+            ).filter(~F.col("_pre").eqNullSafe(F.col("_post")))
+            events = _pre_post_events(paired)
     except Exception:
         return None  # general (row-id) path handles it
     engine.store.overwrite(engine.spark, table, plan, cdc_events=events)
@@ -656,20 +650,36 @@ def _update(engine, sql: str) -> DataFrame:
             )
         else:
             out_cols.append(F.col(fld.name))
+    events = None
+    if engine.store.change_tracking(table):
+        events = _update_events(tgt, matches, assignments, schema)
     engine.store.overwrite(
-        engine.spark,
-        table,
-        joined.select(*out_cols),
-        cdc_events=_update_events(engine, tgt, matches, assignments, schema),
+        engine.spark, table, joined.select(*out_cols), cdc_events=events
     )
     return _summary(engine, rows_updated=n)
 
 
-def _update_events(engine, tgt, matches, assignments, schema) -> DataFrame:
+def _pre_post_events(paired: DataFrame) -> DataFrame:
+    """Update events from ``_pre``/``_post`` row structs: one preimage
+    and one postimage row per pair."""
+    return (
+        paired.select("_pre.*")
+        .withColumn("change_type", F.lit("update_preimage"))
+        .unionByName(
+            paired.select("_post.*").withColumn(
+                "change_type", F.lit("update_postimage")
+            )
+        )
+    )
+
+
+def _update_events(tgt, matches, assignments, schema) -> DataFrame:
     """Change manifest for the general UPDATE path (r10): hit rows from
     the checkpointed target inner-joined with the (small, checkpointed)
     match frame — pre = original columns, post = SET expressions cast
-    to target types; full-row-identical pairs dropped."""
+    to target types; full-row-identical pairs dropped. Callers build it
+    only for a table with change tracking: the store discards it
+    otherwise, and building it is eager analysis on the driver."""
     set_names = {c.lower(): i for i, (c, _) in enumerate(assignments)}
     inner = tgt.join(matches, _RID, "inner")
     names = [f.name for f in schema]
@@ -685,15 +695,7 @@ def _update_events(engine, tgt, matches, assignments, schema) -> DataFrame:
         F.struct(*[F.col(c) for c in names]).alias("_pre"),
         F.struct(*post_cols).alias("_post"),
     ).filter(~F.col("_pre").eqNullSafe(F.col("_post")))
-    return (
-        paired.select("_pre.*")
-        .withColumn("change_type", F.lit("update_preimage"))
-        .unionByName(
-            paired.select("_post.*").withColumn(
-                "change_type", F.lit("update_postimage")
-            )
-        )
-    )
+    return _pre_post_events(paired)
 
 
 # ---------------------------------------------------------------------------
@@ -766,11 +768,13 @@ def _delete(engine, sql: str) -> DataFrame:
     )
     n = metrics["n"]
     kept = tgt.join(ids, _RID, "left_anti").drop(_RID)
-    events = (
-        tgt.join(ids, _RID, "left_semi")
-        .drop(_RID)
-        .withColumn("change_type", F.lit("delete"))
-    )
+    events = None
+    if engine.store.change_tracking(table):
+        events = (
+            tgt.join(ids, _RID, "left_semi")
+            .drop(_RID)
+            .withColumn("change_type", F.lit("delete"))
+        )
     engine.store.overwrite(engine.spark, table, kept, cdc_events=events)
     return _summary(engine, rows_deleted=n)
 
@@ -860,7 +864,9 @@ def _merge(engine, sql: str) -> DataFrame:
     del_ids = None
     on_sql = transpile(on_cond)
     schema_names = [f.name for f in schema]
-    cdc_parts: list[DataFrame] = []  # r10 change manifest accumulators
+    # r10 change manifest parts, built only when a CDC consumer exists
+    tracked = engine.store.change_tracking(table)
+    cdc_parts: list[DataFrame] = []
 
     # Matching (matched / not-matched / extra conditions) is evaluated
     # against the target AS OF statement start (Snowflake semantics):
@@ -879,11 +885,12 @@ def _merge(engine, sql: str) -> DataFrame:
         )
         n_del = metrics["n"]
         patched = patched.join(del_ids, _RID, "left_anti")
-        cdc_parts.append(
-            tgt.join(del_ids, _RID, "left_semi")
-            .select(*schema_names)
-            .withColumn("change_type", F.lit("delete"))
-        )
+        if tracked:
+            cdc_parts.append(
+                tgt.join(del_ids, _RID, "left_semi")
+                .select(*schema_names)
+                .withColumn("change_type", F.lit("delete"))
+            )
 
     if upd is not None:
         assignments = []
@@ -905,9 +912,8 @@ def _merge(engine, sql: str) -> DataFrame:
             matches = matches.join(del_ids, _RID, "left_anti")
         matches, metrics = materialized(matches)
         n_upd = metrics["n"]
-        cdc_parts.append(
-            _update_events(engine, tgt, matches, assignments, schema)
-        )
+        if tracked:
+            cdc_parts.append(_update_events(tgt, matches, assignments, schema))
         joined = patched.join(matches, _RID, "left")
         set_names = {c.lower(): i for i, (c, _) in enumerate(assignments)}
         out_cols = []
@@ -954,9 +960,8 @@ def _merge(engine, sql: str) -> DataFrame:
         n_ins = metrics["n"]
         aligned = _aligned_for_insert(engine, table, new_rows, cols)
         final = final.unionByName(aligned)
-        cdc_parts.append(
-            aligned.withColumn("change_type", F.lit("insert"))
-        )
+        if tracked:
+            cdc_parts.append(aligned.withColumn("change_type", F.lit("insert")))
 
     cdc = None
     if cdc_parts:

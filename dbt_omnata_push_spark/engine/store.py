@@ -557,6 +557,12 @@ class TableStore:
         )
 
     @staticmethod
+    def _read_dv(spark: SparkSession, dv_dir: str) -> DataFrame:
+        """A deletion vector's (relpath, row_index) positions. The schema
+        is given, not inferred: inference is a Spark job per read."""
+        return spark.read.schema("relpath string, row_index long").parquet(dv_dir)
+
+    @staticmethod
     def _relpath_expr(version_dir: str):
         """File identity relative to the version root — stable across
         hard-link/copy retention because _retain_file/_promote_dir keep
@@ -575,7 +581,7 @@ class TableStore:
         dv_dir = self._dv_dir(version_dir)
         if not os.path.isdir(dv_dir):
             return df
-        dv = spark.read.parquet(dv_dir)
+        dv = self._read_dv(spark, dv_dir)
         marked = df.withColumn(
             "_dv_rel", self._relpath_expr(version_dir)
         ).withColumn("_dv_idx", F.col("_metadata.row_index"))
@@ -746,7 +752,7 @@ class TableStore:
         old_dv_dir = self._dv_dir(old_dir)
         old_dv = None
         if os.path.isdir(old_dv_dir):
-            old_dv = spark.read.parquet(old_dv_dir)
+            old_dv = self._read_dv(spark, old_dv_dir)
             # rows already deleted by a prior DV are not deleted again
             matched = matched.join(
                 old_dv, ["relpath", "row_index"], "left_anti"
@@ -1286,13 +1292,8 @@ class TableStore:
         # partitions carry their files verbatim — carry their DV rows
         # too, or deleted rows would resurrect.
         if untouched and os.path.isdir(self._dv_dir(old_dir)):
-            kept_dv = (
-                spark.read.parquet(self._dv_dir(old_dir))
-                .filter(
-                    F.element_at(F.split(F.col("relpath"), "/"), 1).isin(
-                        untouched
-                    )
-                )
+            kept_dv = self._read_dv(spark, self._dv_dir(old_dir)).filter(
+                F.element_at(F.split(F.col("relpath"), "/"), 1).isin(untouched)
             )
             dv_staging = os.path.join(table_dir, "_dv_staging")
             shutil.rmtree(dv_staging, ignore_errors=True)
@@ -2053,7 +2054,7 @@ class TableStore:
         # Deletion-vector carry for the retained closed partition (the
         # open partition was rebuilt from open_df, so its DV rows drop).
         if os.path.isdir(self._dv_dir(old_ver_dir)):
-            kept_dv = spark.read.parquet(self._dv_dir(old_ver_dir)).filter(
+            kept_dv = self._read_dv(spark, self._dv_dir(old_ver_dir)).filter(
                 F.element_at(F.split(F.col("relpath"), "/"), 1)
                 == closed_entry
             )
@@ -2074,15 +2075,21 @@ class TableStore:
         unique_key: str,
         set_cols: list[str],
     ) -> None:
-        """UPDATE ... FROM (salesforce_bulk_load.sql:52-55): overwrite only
-        ``set_cols`` on matching keys, leave other rows untouched.
+        """UPDATE ... FROM: overwrite only ``set_cols`` on matching keys,
+        leave other rows untouched.
 
         Implemented as a MERGE of the patched rows: the inner join yields
         the full-width matched rows with ``set_cols`` replaced, and
         ``merge_upsert`` swaps them in. On a partitioned table that
         routes through the partition-scoped path — untouched partitions
         are hard-linked, so the cost is O(touched partitions), not
-        O(table) (the last O(table) write path flagged in round 2)."""
+        O(table); an unpartitioned table is rewritten whole.
+
+        No push path calls this. The Salesforce load closes its job
+        (salesforce_bulk_load.sql:52-55) by appending the task row once,
+        after close_job, with the close descriptor already set
+        (materializations/push.py), so no push rewrites a tracking
+        table."""
         target = self.read(spark, name)
         patch = src.select(
             F.col(unique_key).alias("_uk"),

@@ -9,13 +9,18 @@ D1, D4-D8):
   Observation on the same job, the count behind the empty-load
   short-circuit; the push's output is checkpointed too, so a lost
   block fails the load instead of calling the API again;
-- Salesforce tracking rows are appended, as the reference INSERTs them
-  (the task row before the push, one log row per record after it);
-  only the closing UPDATE...FROM rewrites the tasks table;
+- every tracking-table commit is an append, so no push rewrites a
+  tracking table. A Salesforce load appends one log row per record
+  after the push and its task row once, after close_job, carrying both
+  the creation and the close descriptors: the reference's create, task
+  INSERT, load and closing UPDATE...FROM are one transaction, so no
+  reader ever sees a task row before its close. If the push, the log
+  append or close_job raises, the task row is appended with NULL
+  close metadata and the error re-raised;
 - the Marketing Cloud upload keeps dense 1-based numbering via
-  ops.rownum.with_global_index (its batch numbers need it) and writes
-  its task and log rows from one persisted result (Snowflake's
-  multi-table INSERT ALL has no Spark equivalent);
+  ops.rownum.with_global_index (its batch numbers need it) and appends
+  its task row and log rows, as the reference's INSERT ALL writes them
+  (Snowflake's multi-table INSERT ALL has no Spark equivalent);
 - deterministic log-entry ids sha2(job_id:row_idx) instead of
   UUID_STRING() (SURVEY.md §7 hard-part 1).
 """
@@ -24,6 +29,7 @@ from __future__ import annotations
 
 import json
 import uuid
+from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -121,33 +127,10 @@ def _salesforce_bulk_load(engine, model, records: DataFrame, legacy=False) -> Ru
     # (1) create job — driver, once (salesforce_bulk_load.sql:13-18).
     meta = connector.create_job(load_type, object_name, serial, external_id_field)
     job_id = str(meta["id"])
-
-    # (2) task row, appended like the reference's INSERT
-    # (salesforce_bulk_load.sql:21-31).
-    tasks_tbl = tracking.ensure_tracking_table(engine, tracking.SFDC_LOAD_TASKS)
+    created = datetime.now(timezone.utc)
     spark = engine.spark
-    task_row = local_frame(
-        spark,
-        [
-            (
-                job_id,
-                model.name,
-                object_name,
-                load_type,
-                external_id_field,
-                json.dumps(meta),
-                None,
-            )
-        ],
-        "job_id string, load_task_name string, object_name string, "
-        "operation string, external_id_field string, creation_metadata string, "
-        "close_metadata string",
-    ).withColumn("creation_time", F.current_timestamp())
-    engine.store.append(
-        spark,
-        tasks_tbl,
-        task_row.select(*tracking.SCHEMAS[tracking.SFDC_LOAD_TASKS].fieldNames()),
-    )
+    tasks_tbl = tracking.ensure_tracking_table(engine, tracking.SFDC_LOAD_TASKS)
+    close_meta = None
 
     # (3) per-batch push with per-record result capture
     # (salesforce_bulk_load.sql:34-48). serial_load (README.md:71) ==
@@ -180,40 +163,51 @@ def _salesforce_bulk_load(engine, model, records: DataFrame, legacy=False) -> Ru
                 {"row_idx": pdf["row_idx"], "record": recs, "result": results}
             )
 
-    # The push runs in this one checkpoint job. A checkpoint, unlike a
-    # persist, cannot be evicted and recomputed, so a lost block fails
-    # the statement instead of calling the remote API a second time.
-    pushed = indexed.mapInPandas(push_batches, _PUSH_SCHEMA).localCheckpoint()
-    logs = pushed.select(
-        F.lit(job_id).alias("job_id"),
-        # deterministic id (reference: UUID_STRING(), line 40)
-        F.sha2(F.concat(F.lit(job_id + ":"), F.col("row_idx").cast("string")), 256).alias(
-            "job_log_entry_id"
-        ),
-        # typed literals: an append, unlike a merge, has no target
-        # schema to coerce a None config value's void column to
-        F.lit(model.name).cast("string").alias("load_task_name"),
-        F.lit(object_name).cast("string").alias("object_name"),
-        F.lit(load_type).cast("string").alias("operation"),
-        F.lit(external_id_field).cast("string").alias("external_id_field"),
-        F.col("record"),
-        F.col("result"),
-    )
-    logs_tbl = tracking.ensure_tracking_table(
-        engine, tracking.SFDC_LOAD_TASK_LOGS
-    )
-    engine.store.append(spark, logs_tbl, logs)
-
-    # (4) close job + UPDATE...FROM (salesforce_bulk_load.sql:51-56).
-    close_meta = connector.close_job(job_id)
-    patch = local_frame(
-        spark,
-        [(job_id, json.dumps(close_meta))],
-        "job_id string, close_metadata string",
-    )
-    engine.store.update_from(
-        spark, tasks_tbl, patch, "job_id", ["close_metadata"]
-    )
+    try:
+        # The push runs in this one checkpoint job. A checkpoint, unlike a
+        # persist, cannot be evicted and recomputed, so a lost block fails
+        # the statement instead of calling the remote API a second time.
+        pushed = indexed.mapInPandas(push_batches, _PUSH_SCHEMA).localCheckpoint()
+        logs = pushed.select(
+            F.lit(job_id).alias("job_id"),
+            # deterministic id (reference: UUID_STRING(), line 40)
+            F.sha2(
+                F.concat(F.lit(job_id + ":"), F.col("row_idx").cast("string")), 256
+            ).alias("job_log_entry_id"),
+            # typed literals: an append, unlike a merge, has no target
+            # schema to coerce a None config value's void column to
+            F.lit(model.name).cast("string").alias("load_task_name"),
+            F.lit(object_name).cast("string").alias("object_name"),
+            F.lit(load_type).cast("string").alias("operation"),
+            F.lit(external_id_field).cast("string").alias("external_id_field"),
+            F.col("record"),
+            F.col("result"),
+        )
+        logs_tbl = tracking.ensure_tracking_table(
+            engine, tracking.SFDC_LOAD_TASK_LOGS
+        )
+        engine.store.append(spark, logs_tbl, logs)
+        # (4) close job (salesforce_bulk_load.sql:51-56).
+        close_meta = json.dumps(connector.close_job(job_id))
+    finally:
+        # (2) the task row (salesforce_bulk_load.sql:21-31) and its close
+        # descriptor in one append. The reference runs create, INSERT,
+        # load and close-UPDATE as one transaction, so no reader sees a
+        # task row before its close. A failed push or close still
+        # commits the row, with NULL close metadata, so the failure
+        # stays inspectable (SURVEY.md §7 hard-part 2).
+        row = (
+            job_id,
+            model.name,
+            object_name,
+            load_type,
+            external_id_field,
+            created,
+            json.dumps(meta),
+            close_meta,
+        )
+        schema = tracking.SCHEMAS[tracking.SFDC_LOAD_TASKS]
+        engine.store.append(spark, tasks_tbl, local_frame(spark, [row], schema))
     return RunResult(model.name, "success", rows_affected=n, extra={"job_id": job_id})
 
 
@@ -313,7 +307,7 @@ def _marketing_cloud_upload(engine, model, records: DataFrame) -> RunResult:
         return RunResult(model.name, "error", message="import poll failed")
 
     # (5) per-row results (SFMC_FETCH_RESULTS, upload.sql:70-84) — batched
-    # executor calls joined by row index, persisted once for both writes.
+    # executor calls joined by row index, read once by the log append.
     def fetch_batches(batches):
         import pandas as pd
 
@@ -328,49 +322,39 @@ def _marketing_cloud_upload(engine, model, records: DataFrame) -> RunResult:
                 }
             )
 
-    results = indexed.mapInPandas(fetch_batches, _PUSH_SCHEMA).persist()
+    results = indexed.mapInPandas(fetch_batches, _PUSH_SCHEMA)
 
     logs = results.select(
         F.lit(job_id).alias("job_id"),
         F.sha2(
             F.concat(F.lit(job_id + ":"), F.col("row_idx").cast("string")), 256
         ).alias("job_log_entry_id"),
-        F.lit(model.name).alias("load_task_name"),
-        F.lit(cfg.get("data_extension_name")).alias("object_name"),
+        F.lit(model.name).cast("string").alias("load_task_name"),
+        F.lit(cfg.get("data_extension_name")).cast("string").alias("object_name"),
         F.lit("data_extension_upload").alias("operation"),
         F.col("record"),
         F.col("result"),
     )
-    # INSERT ALL (upload.sql:37-42): first row seeds the task, all rows
-    # log -> two writes from the persisted result.
+    # INSERT ALL (upload.sql:37-42): one task row and a log row per
+    # record, both appended (the fresh uuid4 job id can match no row).
     tasks_tbl = tracking.ensure_tracking_table(engine, tracking.SFMC_LOAD_TASKS)
     logs_tbl = tracking.ensure_tracking_table(
         engine, tracking.SFMC_LOAD_TASK_LOGS
     )
-    task_row = local_frame(
-        spark,
-        [
-            (
-                job_id,
-                model.name,
-                cfg.get("data_extension_name"),
-                "data_extension_upload",
-                json.dumps(import_params),
-            )
-        ],
-        "job_id string, load_task_name string, object_name string, "
-        "operation string, creation_metadata string",
-    ).withColumn("creation_time", F.current_timestamp())
-    engine.store.merge_upsert(
+    task_row = (
+        job_id,
+        model.name,
+        cfg.get("data_extension_name"),
+        "data_extension_upload",
+        datetime.now(timezone.utc),
+        json.dumps(import_params),
+    )
+    engine.store.append(
         spark,
         tasks_tbl,
-        task_row.select(*tracking.SCHEMAS[tracking.SFMC_LOAD_TASKS].fieldNames()),
-        "job_id",
+        local_frame(spark, [task_row], tracking.SCHEMAS[tracking.SFMC_LOAD_TASKS]),
     )
-    engine.store.merge_upsert(
-        spark, logs_tbl, logs, "job_log_entry_id"
-    )
-    results.unpersist()
+    engine.store.append(spark, logs_tbl, logs)
     indexed.unpersist()
     return RunResult(
         model.name, "success", rows_affected=n_records, extra={"job_id": job_id}

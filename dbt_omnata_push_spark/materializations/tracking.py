@@ -69,12 +69,10 @@ SCHEMAS: dict[str, StructType] = {
 }
 
 
-# Log tables gain one job's worth of rows per push, in a new job_id
-# directory. The Salesforce push appends them; the Marketing Cloud upload
-# merges, and the partitioning confines that merge to the new job's
-# directory (store._partition_scoped_merge). Either commit still links
-# every earlier job's files, so its cost grows with the job count.
-# Task tables stay unpartitioned: one row per job, trivially small.
+# Log tables gain one job's worth of rows per push, appended in a new
+# job_id directory. The append still links every earlier job's files,
+# so its cost grows with the job count. Task tables stay unpartitioned:
+# one row per job, appended once.
 PARTITION_BY: dict[str, str] = {
     SFDC_LOAD_TASK_LOGS: "job_id",
     SFMC_LOAD_TASK_LOGS: "job_id",

@@ -120,7 +120,7 @@ def job_budget(spark, max_jobs: int):
 
     The block runs under a fresh job group (broadcast and shuffle
     futures inherit it, so asynchronous jobs count too); the previous
-    group is restored on exit."""
+    group is restored on exit. An overrun lists every job's call site."""
     sc = spark.sparkContext
     keys = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
     saved = {k: sc.getLocalProperty(k) for k in keys}
@@ -133,5 +133,9 @@ def job_budget(spark, max_jobs: int):
             sc.setLocalProperty(k, v)
     # the status store is fed by the listener bus: drain it first
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert jobs <= max_jobs, f"launched {jobs} Spark jobs, budget {max_jobs}"
+    jobs = sorted(sc.statusTracker().getJobIdsForGroup(group))
+    status = sc._jsc.sc().statusStore()
+    assert len(jobs) <= max_jobs, (
+        f"launched {len(jobs)} Spark jobs, budget {max_jobs}:\n"
+        + "\n".join(f"  job {j}: {status.job(j).name()}" for j in jobs)
+    )

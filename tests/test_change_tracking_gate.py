@@ -65,6 +65,51 @@ class TestGateOff:
         v = engine.store.current_version("t")
         assert not os.path.isdir(engine.store._cdc_rows_dir("t", v))
 
+    @pytest.mark.parametrize("tracked", [False, True], ids=["untracked", "tracked"])
+    def test_dml_builds_event_frames_only_when_tracked(
+        self, spark, engine, monkeypatch, tracked
+    ):
+        """UPDATE (fast and general path), DELETE...USING and MERGE hand
+        the store CDC events only for a tracked table; building them is
+        eager analysis the untracked store would throw away."""
+        _mk(engine)
+        engine.query("create table s as select id as pk, id as w from range(3, 8)")
+        if tracked:
+            engine.query("alter table t set change_tracking = true")
+        passed = []
+        orig = TableStore.overwrite
+
+        def spy(self, spark_, name, df, partition_by=None, cdc_events=None):
+            passed.append(cdc_events is not None)
+            return orig(self, spark_, name, df, partition_by, cdc_events)
+
+        monkeypatch.setattr(TableStore, "overwrite", spy)
+        for stmt in (
+            "update t set v = v + 1 where pk < 3",
+            "update t set v = s.w from s where t.pk = s.pk",
+            "delete from t using s where t.pk = s.pk and s.w = 7",
+            "merge into t using s on t.pk = s.pk "
+            "when matched and s.w = 3 then delete "
+            "when matched then update set v = s.w "
+            "when not matched then insert (pk, v) values (s.pk, s.w)",
+        ):
+            engine.query(stmt)
+        assert passed == [tracked] * 4
+        got = sorted((r["pk"], r["v"]) for r in engine.store.read(spark, "t").collect())
+        assert got == [
+            (0, 1), (1, 11), (2, 21), (4, 4), (5, 5), (6, 6), (7, 7), (8, 80), (9, 90)
+        ]
+
+    def test_update_fast_path_falls_back_on_untracked_table(self, spark, engine):
+        """An IN-subquery predicate cannot be planned by the FROM-less fast
+        path; the general path still runs it."""
+        _mk(engine, n=5)
+        engine.query("create table s as select id as pk from range(1, 3)")
+        res = engine.query("update t set v = v + 1 where pk in (select pk from s)")
+        assert res.collect()[0]["rows_updated"] == 2
+        got = sorted((r["pk"], r["v"]) for r in engine.store.read(spark, "t").collect())
+        assert got == [(0, 0), (1, 11), (2, 21), (3, 30), (4, 40)]
+
     def test_untracked_changes_still_correct_via_fallback(
         self, spark, engine
     ):

@@ -12,6 +12,8 @@ from pyspark.sql import functions as F
 
 from dbt_omnata_push_spark.engine.store import TableStore
 
+from .conftest import job_budget
+
 
 def _inodes(d):
     out = {}
@@ -38,6 +40,17 @@ def test_delete_where_filters_reads_without_rewriting_files(spark, tmp_path):
     assert before == after  # identical files, hard-linked — no rewrite
     got = {r["id"] for r in store.read(spark, "t").collect()}
     assert got == {i for i in range(100) if i % 7 != 0}
+
+
+def test_read_of_a_version_with_a_dv_launches_no_job(spark, tmp_path):
+    """The vector's schema is given, not inferred: building the read,
+    anti-join included, starts no Spark job."""
+    store = TableStore(str(tmp_path / "s"))
+    store.create(spark, "t", spark.range(30))
+    store.delete_where(spark, "t", F.col("id") < 10)
+    with job_budget(spark, 0):
+        df = store.read(spark, "t")
+    assert sorted(r["id"] for r in df.collect()) == list(range(10, 30))
 
 
 def test_delete_where_is_cumulative_and_idempotent(spark, tmp_path):

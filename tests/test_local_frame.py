@@ -134,9 +134,10 @@ SUMMARIES = [
 ]
 # Spark jobs of one cycle, each summary collected, async shuffle and
 # broadcast stages included: the UPDATE's and MERGE's target rewrites,
-# the statements' checkpoints, the DELETE's deletion-vector pass and
-# parquet footer reads. Reading the four summaries launches none.
-CYCLE_JOBS = 19
+# the statements' checkpoints and the DELETE's deletion-vector pass.
+# Reading the four summaries launches none, and neither does reading a
+# deletion vector back: its schema is given, not inferred.
+CYCLE_JOBS = 17
 
 
 @pytest.fixture(scope="module")

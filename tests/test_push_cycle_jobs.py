@@ -28,11 +28,11 @@ DAY0 = datetime.date(2001, 1, 1)
 NAMESPACE = "push_cycle_jobs"
 # Spark jobs, shuffle and broadcast stages included, of one non-empty
 # cycle: the daily model's watermark scan, batch checkpoint and append;
-# the push's records checkpoint, task-row append, push checkpoint and
-# log append; the closing update_from. The task row and the close patch
-# are LocalRelations (engine.session.local_frame): reading them launches
-# no job of its own.
-CYCLE_JOBS = 15
+# the push's records checkpoint, push checkpoint and log append; and one
+# append of the task row after close_job, close metadata included, so
+# no commit rewrites the tasks table. The task row is a LocalRelation
+# (engine.session.local_frame): reading it launches no job of its own.
+CYCLE_JOBS = 10
 # One empty cycle: the watermark scan and the two checkpoints that find
 # no rows.
 EMPTY_CYCLE_JOBS = 5

@@ -201,3 +201,119 @@ def test_sfmc_full_refresh_empty_model_noop(spark, tmp_path):
     results = engine.run()
     assert results["empty_contacts_load"].status == "skipped"
     assert len(mc.imports) == 0
+
+
+# ---------------------------------------------------------------------------
+# Tracking-table commits of a single load: one append per table on
+# success; on a failed push or close, a task row with NULL close metadata.
+# ---------------------------------------------------------------------------
+
+
+class _FailingLoad(MockSalesforceConnector):
+    def load_batch(self, job_id, records):
+        raise RuntimeError("load_batch failed")
+
+
+class _FailingClose(MockSalesforceConnector):
+    def close_job(self, job_id):
+        raise RuntimeError("close_job failed")
+
+
+N_RECORDS = 5
+SFDC_TABLES = (tracking.SFDC_LOAD_TASKS, tracking.SFDC_LOAD_TASK_LOGS)
+SFMC_TABLES = (tracking.SFMC_LOAD_TASKS, tracking.SFMC_LOAD_TASK_LOGS)
+
+
+def _one_load(spark, root, app, connector, tables):
+    """An engine with one push model of N_RECORDS records and its two
+    tracking tables already created."""
+    from dbt_omnata_push_spark.engine.dag import Engine
+    from dbt_omnata_push_spark.engine.model import Model
+    from dbt_omnata_push_spark.engine.store import TableStore
+
+    engine = Engine(spark, TableStore(str(root)))
+    if app == "salesforce":
+        config = {
+            "operation": "bulk_load",
+            "object_name": "Account",
+            "external_id_field": "AccountID__c",
+        }
+    else:
+        config = {
+            "operation": "data_extension_upload",
+            "data_extension_name": "Contacts",
+        }
+    engine.register(
+        Model(
+            "one_load",
+            builder=lambda ctx: spark.createDataFrame(
+                [(json.dumps({"AccountID__c": f"a{i}"}),) for i in range(N_RECORDS)],
+                "record string",
+            ),
+            config={
+                "materialized": "omnata_push",
+                "app": app,
+                "connector": connector,
+                **config,
+            },
+        )
+    )
+    for t in tables:
+        tracking.ensure_tracking_table(engine, t)
+    return engine
+
+
+def _ops(engine, name):
+    return [r["op"] for r in engine.store.history(engine.spark, name).collect()]
+
+
+@pytest.mark.parametrize(
+    "app, connector, tables",
+    [
+        ("salesforce", MockSalesforceConnector, SFDC_TABLES),
+        ("marketing_cloud", MockMarketingCloudConnector, SFMC_TABLES),
+    ],
+    ids=["sfdc", "sfmc"],
+)
+def test_load_commits_each_tracking_table_once_by_append(
+    spark, tmp_path, app, connector, tables
+):
+    engine = _one_load(spark, tmp_path, app, connector(), tables)
+    before = {t: _ops(engine, t) for t in tables}
+    assert engine.run()["one_load"].status == "success"
+    for t in tables:
+        assert _ops(engine, t) == ["append", *before[t]], t
+    tasks, logs = (_table(engine, t) for t in tables)
+    assert tasks.count() == 1
+    assert logs.count() == N_RECORDS
+    if app == "salesforce":
+        row = tasks.collect()[0]
+        assert json.loads(row["close_metadata"])["state"] == "Closed"
+        assert json.loads(row["creation_metadata"])["id"] == row["job_id"]
+        assert row["creation_time"] is not None
+
+
+@pytest.mark.parametrize(
+    "connector, logged",
+    [(_FailingLoad, 0), (_FailingClose, N_RECORDS)],
+    ids=["load_batch_raises", "close_job_raises"],
+)
+def test_failed_sfdc_load_leaves_its_task_row_open(
+    spark, tmp_path, connector, logged
+):
+    """The same end state as a task row committed before the push and
+    closed after it: the failed job's row exists with NULL close
+    metadata, and the log holds whatever was appended before the error."""
+    conn = connector()
+    engine = _one_load(spark, tmp_path, "salesforce", conn, SFDC_TABLES)
+    res = engine.run()["one_load"]
+    assert res.status == "error", res
+    [created] = conn.created_jobs
+    tasks = _table(engine, tracking.SFDC_LOAD_TASKS).collect()
+    assert [(r["job_id"], r["close_metadata"]) for r in tasks] == [
+        (created["id"], None)
+    ]
+    assert json.loads(tasks[0]["creation_metadata"]) == created
+    logs = _table(engine, tracking.SFDC_LOAD_TASK_LOGS)
+    assert logs.count() == logged
+    assert logs.filter(F.col("job_id") != created["id"]).count() == 0
