@@ -15,19 +15,20 @@ OBJECT_CONSTRUCT, UUID_STRING, ...) works inside DML too.
 
 Routing to the store's commit machinery:
 
-- ``INSERT``            -> ``store.append`` (source localCheckpoint'ed
-                           first so nondeterministic expressions like
-                           UUID_STRING are evaluated exactly once —
-                           the same persisted-DF discipline as
-                           materializations/push.py's INSERT ALL);
+- ``INSERT``            -> ``store.append`` (the write is the only
+                           action over the source, so nondeterministic
+                           expressions like UUID_STRING are evaluated
+                           once; ``INSERT ALL`` checkpoints its source,
+                           which feeds several targets);
 - ``DELETE .. WHERE``   -> ``store.delete_where`` (the deletion-vector
                            merge-on-read path: O(matched) commit, data
                            files carried unrewritten);
-- ``UPDATE`` / ``MERGE``-> versioned rewrite (Snowflake itself rewrites
-                           matched micro-partitions; row identity is a
-                           checkpointed monotonically_increasing_id so
-                           matched rows patch deterministically within
-                           the statement);
+- ``UPDATE``            -> versioned rewrite (Snowflake itself rewrites
+                           matched micro-partitions; with FROM, row
+                           identity is a checkpointed row id);
+- ``MERGE``             -> one plan, one rewrite: target FULL OUTER JOIN
+                           source, each pair tagged with the first WHEN
+                           clause that holds, one pair kept per target row;
 - ``CREATE TABLE AS``   -> ``store.create`` / ``overwrite``;
 - ``TRUNCATE``          -> empty-frame overwrite (history retained).
 
@@ -35,10 +36,10 @@ Results mirror Snowflake's statement output: a 1-row summary DataFrame
 (``rows_inserted`` / ``rows_updated`` / ``rows_deleted``), or one row
 per target table for ``INSERT ALL``.
 
-Scale notes: UPDATE/MERGE counts and row-ids ride one localCheckpoint
-of the target (a single materialization, partition-parallel); nothing
-here collects data rows to the driver.  Multi-match UPDATE..FROM picks
-one arbitrary source row per target row (Snowflake's default
+Scale notes: counts ride the commit's write as ``Observation``s; only
+UPDATE..FROM and DELETE..USING checkpoint the target (for row ids), and
+nothing here collects data rows to the driver. Multi-match UPDATE..FROM
+and MERGE pick one arbitrary source row per target row (Snowflake's
 ERROR_ON_NONDETERMINISTIC_MERGE=false behavior).
 """
 
@@ -46,7 +47,7 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 from ..ops.observe import materialized, observed
 from .session import local_frame
@@ -55,9 +56,6 @@ from .sqlfront import _split_top_level_args, transpile
 # ---------------------------------------------------------------------------
 # statement-level scanning (quote/paren aware)
 # ---------------------------------------------------------------------------
-
-_LINE_COMMENT_RE = re.compile(r"--[^\n]*")
-
 
 def _strip_comments(sql: str) -> str:
     out, i, n, quote = [], 0, len(sql), None
@@ -562,18 +560,7 @@ def _update_fast_path(engine, table, alias, assignments, cond):
             # value actually changed — a pushed-down filtered scan, O(hit)
             # output. Raw events; the reader's key/digest semantics apply
             # at CDC composition time (store._compose_changes).
-            post_cols = [
-                set_map[f.name.lower()].cast(f.dataType).alias(f.name)
-                if f.name.lower() in set_map
-                else F.col(f.name)
-                for f in tgt.schema
-            ]
-            names = [f.name for f in tgt.schema]
-            paired = tgt.filter(pred).select(
-                F.struct(*[F.col(c) for c in names]).alias("_pre"),
-                F.struct(*post_cols).alias("_post"),
-            ).filter(~F.col("_pre").eqNullSafe(F.col("_post")))
-            events = _pre_post_events(paired)
+            events = _update_events(tgt.filter(pred), tgt.schema, cols)
     except Exception:
         return None  # general (row-id) path handles it
     engine.store.overwrite(engine.spark, table, plan, cdc_events=events)
@@ -585,6 +572,17 @@ def _register_df(engine, df: DataFrame, *names: str) -> None:
         if n:
             df.createOrReplaceTempView(n.strip('"').rsplit(".", 1)[-1])
     engine._mark_shadowed(*names)
+
+
+def _set_assignments(text: str) -> list[tuple[str, str]]:
+    """The ``(column, expression)`` pairs of a SET list."""
+    out = []
+    for part in _split_top_level_args(text):
+        cm = re.match(rf"(?is)^\s*({_IDENT})\s*=\s*(.+)$", part.strip())
+        if not cm:
+            raise ValueError(f"unparsable SET assignment: {part[:80]}")
+        out.append((cm.group(1).strip('"'), cm.group(2).strip()))
+    return out
 
 
 def _update(engine, sql: str) -> DataFrame:
@@ -603,13 +601,7 @@ def _update(engine, sql: str) -> DataFrame:
     src_text = rest[fm.end() : wm.start() if wm else len(rest)] if fm else None
     cond = rest[wm.end() :].strip() if wm else None
 
-    assignments = []
-    for part in _split_top_level_args(set_text):
-        cm = re.match(rf"(?is)^\s*({_IDENT})\s*=\s*(.+)$", part.strip())
-        if not cm:
-            raise ValueError(f"unparsable SET assignment: {part[:80]}")
-        assignments.append((cm.group(1).strip('"'), cm.group(2).strip()))
-
+    assignments = _set_assignments(set_text)
     if src_text is None:
         fast = _update_fast_path(engine, table, alias, assignments, cond)
         if fast is not None:
@@ -652,16 +644,24 @@ def _update(engine, sql: str) -> DataFrame:
             out_cols.append(F.col(fld.name))
     events = None
     if engine.store.change_tracking(table):
-        events = _update_events(tgt, matches, assignments, schema)
+        hits = joined.filter(F.col("__dml_hit__"))
+        events = _update_events(hits, schema, out_cols)
     engine.store.overwrite(
         engine.spark, table, joined.select(*out_cols), cdc_events=events
     )
     return _summary(engine, rows_updated=n)
 
 
-def _pre_post_events(paired: DataFrame) -> DataFrame:
-    """Update events from ``_pre``/``_post`` row structs: one preimage
-    and one postimage row per pair."""
+def _update_events(hits: DataFrame, schema, post_cols: list) -> DataFrame:
+    """Change manifest (r10) of updated rows: for each row of ``hits``
+    whose value changed, its preimage (the ``schema`` columns) and its
+    postimage (``post_cols``). Callers build it only for a table with
+    change tracking: the store discards it otherwise, and building it
+    is eager analysis on the driver."""
+    names = [f.name for f in schema]
+    paired = hits.select(
+        F.struct(*names).alias("_pre"), F.struct(*post_cols).alias("_post")
+    ).filter(~F.col("_pre").eqNullSafe(F.col("_post")))
     return (
         paired.select("_pre.*")
         .withColumn("change_type", F.lit("update_preimage"))
@@ -671,31 +671,6 @@ def _pre_post_events(paired: DataFrame) -> DataFrame:
             )
         )
     )
-
-
-def _update_events(tgt, matches, assignments, schema) -> DataFrame:
-    """Change manifest for the general UPDATE path (r10): hit rows from
-    the checkpointed target inner-joined with the (small, checkpointed)
-    match frame — pre = original columns, post = SET expressions cast
-    to target types; full-row-identical pairs dropped. Callers build it
-    only for a table with change tracking: the store discards it
-    otherwise, and building it is eager analysis on the driver."""
-    set_names = {c.lower(): i for i, (c, _) in enumerate(assignments)}
-    inner = tgt.join(matches, _RID, "inner")
-    names = [f.name for f in schema]
-    post_cols = [
-        F.col(f"__set_{set_names[f.name.lower()]}")
-        .cast(f.dataType)
-        .alias(f.name)
-        if f.name.lower() in set_names
-        else F.col(f.name)
-        for f in schema
-    ]
-    paired = inner.select(
-        F.struct(*[F.col(c) for c in names]).alias("_pre"),
-        F.struct(*post_cols).alias("_post"),
-    ).filter(~F.col("_pre").eqNullSafe(F.col("_post")))
-    return _pre_post_events(paired)
 
 
 # ---------------------------------------------------------------------------
@@ -788,7 +763,77 @@ _MERGE_RE = re.compile(
 )
 
 
+_MERGE_HEADER = (
+    r"(?is)\bwhen\s+(not\s+matched|matched)\s*(?:and\s+(.*?))?\s*then\s+"
+    r"(update\s+set\s+|delete\b|insert\b)"
+)
+_SRC_HIT, _TAG = "__dml_src_hit__", "__dml_tag__"
+
+
+def _merge_clauses(when_text: str, schema) -> list[dict]:
+    """The WHEN clauses in statement order: ``matched`` (bool), ``extra``
+    (the AND condition or None), ``action``, and ``values`` mapping a
+    lower-cased target column to the SQL it takes (SET, or INSERT)."""
+    headers, cm = [], _scan_top(when_text, _MERGE_HEADER)
+    while cm:  # top level only: a quoted "when matched" is no clause
+        headers.append(cm)
+        cm = _scan_top(when_text, _MERGE_HEADER, cm.end())
+    if not headers:
+        raise ValueError("MERGE requires at least one WHEN clause")
+    clauses = []
+    for cm, nxt in zip(headers, [*headers[1:], None]):
+        body = when_text[cm.end() : nxt.start() if nxt else None].strip()
+        action = cm.group(3).lower().split()[0]
+        pairs = _set_assignments(body) if action == "update" else []
+        if action == "insert":
+            im = re.match(r"(?is)^(?:\(([^)]*)\)\s*)?values\s*\((.*)\)\s*$", body)
+            if not im:
+                raise ValueError(f"unparsable MERGE INSERT: {body[:80]}")
+            cols = (
+                [c.strip().strip('"').rsplit(".", 1)[-1]
+                 for c in _split_top_level_args(im.group(1))]
+                if im.group(1)
+                else [f.name for f in schema]
+            )
+            vals = _split_top_level_args(im.group(2))
+            if len(vals) != len(cols):
+                raise ValueError(
+                    f"MERGE INSERT: {len(cols)} columns, {len(vals)} values"
+                )
+            pairs = list(zip(cols, vals))
+        values = {c.lower(): e for c, e in pairs}
+        unknown = sorted(set(values) - {f.name.lower() for f in schema})
+        if unknown:
+            raise ValueError(f"MERGE {action.upper()}: unknown columns {unknown}")
+        clauses.append({
+            "matched": "not" not in cm.group(1).lower(),
+            "extra": (cm.group(2) or "").strip() or None,
+            "action": action,
+            "values": values,
+        })
+    for i, c in enumerate(clauses):
+        if c["extra"] is None and any(
+            d["matched"] == c["matched"] for d in clauses[i + 1 :]
+        ):
+            raise ValueError(
+                "MERGE: a WHEN clause without an AND condition must be the "
+                "last of its kind (MATCHED / NOT MATCHED)"
+            )
+    return clauses
+
+
+def _case(guards: list[str], values: list[str]) -> str:
+    return f"CASE {' '.join(f'WHEN {g} THEN {v}' for g, v in zip(guards, values))} END"
+
+
 def _merge(engine, sql: str) -> DataFrame:
+    """One plan, one commit: ``target FULL OUTER JOIN source ON <on>``,
+    each pair tagged with the first WHEN clause (statement order) whose
+    AND condition holds, one pair kept per target row, and the new
+    version written by a single ``store.overwrite``. Matching sees the
+    target as of statement start. When several source rows match one
+    target row, the pair with the earliest clause wins, ties broken
+    arbitrarily (Snowflake's ERROR_ON_NONDETERMINISTIC_MERGE=false)."""
     s = _strip_comments(sql).strip().rstrip(";")
     m = _MERGE_RE.match(s)
     if not m:
@@ -806,172 +851,98 @@ def _merge(engine, sql: str) -> DataFrame:
     if not w1:
         raise ValueError("MERGE requires at least one WHEN clause")
     on_cond = after_on[: w1.start()].strip()
-    when_text = after_on[w1.start() :]
+    schema = engine.store.read(engine.spark, table).schema
+    clauses = _merge_clauses(after_on[w1.start() :], schema)
 
-    # src: bare table (with optional alias) or (subquery) alias
-    sm = re.match(
-        rf"(?is)^\(\s*(.*)\s*\)\s*(?:as\s+)?({_IDENT})?\s*$", src_part
-    )
+    # src: bare table (with optional alias) or (subquery) alias. Not
+    # checkpointed: the commit's write is the only action over it, as
+    # for INSERT, so it is evaluated once.
+    sm = re.match(rf"(?is)^\(\s*(.*)\s*\)\s*(?:as\s+)?({_IDENT})?\s*$", src_part)
     if sm:
-        src_df = engine.query(sm.group(1)).localCheckpoint()
+        src_df = engine.query(sm.group(1))
         src_alias = (sm.group(2) or "__dml_src__").strip('"')
     else:
         tm = re.match(rf"(?is)^({_TABLE})(?:\s+({_IDENT}))?\s*$", src_part)
         if not tm:
             raise ValueError(f"unparsable MERGE source: {src_part[:80]}")
-        src_df = engine.store.read(
-            engine.spark, _resolve_table(engine, tm.group(1))
-        ).localCheckpoint()
+        src_df = engine.store.read(engine.spark, _resolve_table(engine, tm.group(1)))
         src_alias = (tm.group(2) or tm.group(1)).strip('"').rsplit(".", 1)[-1]
 
-    header_re = re.compile(
-        r"(?is)\bwhen\s+(not\s+matched|matched)\s*(?:and\s+(.*?))?\s*then\s+"
-        r"(update\s+set\s+|delete\b|insert\b)"
-    )
-    headers = list(header_re.finditer(when_text))
-    clauses = []
-    for idx, cm in enumerate(headers):
-        kind = "not_matched" if "not" in cm.group(1).lower() else "matched"
-        action = cm.group(3).lower().split()[0]
-        end = headers[idx + 1].start() if idx + 1 < len(headers) else len(when_text)
-        clauses.append(
-            {
-                "kind": kind,
-                "extra": (cm.group(2) or "").strip() or None,
-                "action": action,
-                "body": when_text[cm.end() : end].strip(),
-            }
-        )
-
-    upd = next(
-        (c for c in clauses if c["kind"] == "matched" and c["action"] == "update"),
-        None,
-    )
-    dele = next(
-        (c for c in clauses if c["kind"] == "matched" and c["action"] == "delete"),
-        None,
-    )
-    ins = next((c for c in clauses if c["kind"] == "not_matched"), None)
-
     engine._register_views()
-    tgt = _with_rid(engine, table)
-    _register_df(engine, tgt, alias, m.group(1))
-    _register_df(engine, src_df, src_alias)
-    schema = engine.store.read(engine.spark, table).schema
-
-    n_upd = n_del = n_ins = 0
-    patched = tgt
-    del_ids = None
-    on_sql = transpile(on_cond)
-    schema_names = [f.name for f in schema]
-    # r10 change manifest parts, built only when a CDC consumer exists
-    tracked = engine.store.change_tracking(table)
-    cdc_parts: list[DataFrame] = []
-
-    # Matching (matched / not-matched / extra conditions) is evaluated
-    # against the target AS OF statement start (Snowflake semantics):
-    # the `alias` view stays the original target throughout; the delete
-    # branch only decides which target rows survive into the new
-    # version. When a target row satisfies both DELETE and UPDATE with
-    # no disambiguating AND conditions, DELETE wins (documented
-    # simplification of Snowflake's clause-order rule).
-    if dele is not None:
-        extra = f" AND ({transpile(dele['extra'])})" if dele["extra"] else ""
-        del_ids, metrics = materialized(
-            engine.spark.sql(
-                f"SELECT {alias}.{_RID} AS {_RID} FROM {alias}, {src_alias} "
-                f"WHERE ({on_sql}){extra}"
-            ).dropDuplicates([_RID])
-        )
-        n_del = metrics["n"]
-        patched = patched.join(del_ids, _RID, "left_anti")
-        if tracked:
-            cdc_parts.append(
-                tgt.join(del_ids, _RID, "left_semi")
-                .select(*schema_names)
-                .withColumn("change_type", F.lit("delete"))
-            )
-
-    if upd is not None:
-        assignments = []
-        for part in _split_top_level_args(upd["body"]):
-            cm2 = re.match(rf"(?is)^\s*({_IDENT})\s*=\s*(.+)$", part.strip())
-            if not cm2:
-                raise ValueError(f"unparsable MERGE SET: {part[:80]}")
-            lhs = cm2.group(1).strip('"')
-            assignments.append((lhs.rsplit(".", 1)[-1], cm2.group(2).strip()))
-        extra = f" AND ({transpile(upd['extra'])})" if upd["extra"] else ""
-        set_select = ", ".join(
-            f"({transpile(e)}) AS __set_{i}" for i, (_, e) in enumerate(assignments)
-        )
-        matches = engine.spark.sql(
-            f"SELECT {alias}.{_RID} AS {_RID}, true AS __dml_hit__, "
-            f"{set_select} FROM {alias}, {src_alias} WHERE ({on_sql}){extra}"
-        ).dropDuplicates([_RID])
-        if del_ids is not None:
-            matches = matches.join(del_ids, _RID, "left_anti")
-        matches, metrics = materialized(matches)
-        n_upd = metrics["n"]
-        if tracked:
-            cdc_parts.append(_update_events(tgt, matches, assignments, schema))
-        joined = patched.join(matches, _RID, "left")
-        set_names = {c.lower(): i for i, (c, _) in enumerate(assignments)}
-        out_cols = []
-        for fld in schema:
-            if fld.name.lower() in set_names:
-                i = set_names[fld.name.lower()]
-                out_cols.append(
-                    F.when(F.col("__dml_hit__"), F.col(f"__set_{i}"))
-                    .otherwise(F.col(fld.name))
-                    .cast(fld.dataType)
-                    .alias(fld.name)
-                )
-            else:
-                out_cols.append(F.col(fld.name))
-        patched = joined.select(*out_cols, F.col(_RID))
-
-    final = patched.drop(_RID, "__dml_hit__")
-
-    if ins is not None:
-        im = re.match(
-            r"(?is)^(?:\(([^)]*)\)\s*)?values\s*\((.*)\)\s*$", ins["body"]
-        )
-        if not im:
-            raise ValueError(f"unparsable MERGE INSERT: {ins['body'][:80]}")
-        cols = (
-            [c.strip().strip('"').rsplit(".", 1)[-1]
-             for c in _split_top_level_args(im.group(1))]
-            if im.group(1)
-            else [f.name for f in schema]
-        )
-        vals = _split_top_level_args(im.group(2))
-        # Anti-join (not SQL NOT EXISTS): a correlated subquery would
-        # mis-resolve source refs against same-named output aliases.
-        anti = src_df.alias(src_alias).join(
-            tgt.alias(alias), F.expr(on_sql), "left_anti"
-        )
-        if ins["extra"]:
-            anti = anti.filter(F.expr(transpile(ins["extra"])))
-        new_rows, metrics = materialized(
-            anti.select(
-                *[F.expr(transpile(v)).alias(c) for v, c in zip(vals, cols)]
-            )
-        )
-        n_ins = metrics["n"]
-        aligned = _aligned_for_insert(engine, table, new_rows, cols)
-        final = final.unionByName(aligned)
-        if tracked:
-            cdc_parts.append(aligned.withColumn("change_type", F.lit("insert")))
-
-    cdc = None
-    if cdc_parts:
-        cdc = cdc_parts[0]
-        for p in cdc_parts[1:]:
-            cdc = cdc.unionByName(p)
-    engine.store.overwrite(engine.spark, table, final, cdc_events=cdc)
-    return _summary(
-        engine, rows_inserted=n_ins, rows_updated=n_upd, rows_deleted=n_del
+    tgt = engine.store.read(engine.spark, table).withColumn(
+        _RID, F.monotonically_increasing_id()
     )
+    _register_df(engine, tgt, alias, m.group(1))
+    _register_df(engine, src_df.withColumn(_SRC_HIT, F.lit(True)), src_alias)
+
+    matched = f"{alias}.{_RID} IS NOT NULL AND {src_alias}.{_SRC_HIT} IS NOT NULL"
+    guards = [
+        f"({matched if c['matched'] else f'{alias}.{_RID} IS NULL'})"
+        + (f" AND ({transpile(c['extra'])})" if c["extra"] else "")
+        for c in clauses
+    ]
+    # A clause's values are evaluated only on the pairs it tags.
+    value_cols = {
+        (i, col): f"__dml_c{i}_{j}"
+        for i, c in enumerate(clauses)
+        for j, col in enumerate(c["values"])
+    }
+    tags = [str(i) for i in range(len(clauses))]
+    selects = [f"{alias}.*", f"{_case(guards, tags)} AS {_TAG}"]
+    for (i, col), name in value_cols.items():
+        expr = f"({transpile(clauses[i]['values'][col])})"
+        selects.append(f"{_case(guards[: i + 1], ['NULL'] * i + [expr])} AS {name}")
+    pairs = engine.spark.sql(
+        f"SELECT {', '.join(selects)} FROM {alias} "
+        f"FULL OUTER JOIN {src_alias} ON ({transpile(on_cond)})"
+    )
+
+    # One pair per target row, the earliest clause first. Source-only
+    # pairs each get their own negative key: they never share a window.
+    tag = F.col(_TAG)
+    key = F.coalesce(F.col(_RID), F.lit(-1) - F.monotonically_increasing_id())
+    rank = F.row_number().over(Window.partitionBy(key).orderBy(tag.asc_nulls_last()))
+    one = pairs.withColumn("__dml_rank__", rank).filter("__dml_rank__ = 1")
+
+    def tagged(action: str):
+        ids = [i for i, c in enumerate(clauses) if c["action"] == action]
+        return F.coalesce(tag.isin(ids), F.lit(False)) if ids else F.lit(False)
+
+    is_ins, is_upd, is_del = tagged("insert"), tagged("update"), tagged("delete")
+    counts = {
+        f"rows_{k}": F.sum(c.cast("long"))
+        for k, c in (("inserted", is_ins), ("updated", is_upd), ("deleted", is_del))
+    }
+    tracked = engine.store.change_tracking(table)
+    if tracked:
+        # the new version and its CDC events derive from one evaluation
+        one, n = materialized(one, **counts)
+    else:
+        one, get = observed(one, **counts)
+
+    new_cols = []
+    for fld in schema:
+        col = F.col(fld.name)
+        for i in reversed(range(len(clauses))):
+            name = value_cols.get((i, fld.name.lower()))
+            if name is not None:
+                col = F.when(tag == i, F.col(name).cast(fld.dataType)).otherwise(col)
+        new_cols.append(col.alias(fld.name))
+    final = one.filter(is_ins | (F.col(_RID).isNotNull() & ~is_del)).select(*new_cols)
+
+    events = None
+    if tracked:
+        events = (
+            one.filter(is_del).select(*[f.name for f in schema])
+            .withColumn("change_type", F.lit("delete"))
+            .unionByName(_update_events(one.filter(is_upd), schema, new_cols))
+            .unionByName(
+                one.filter(is_ins).select(*new_cols)
+                .withColumn("change_type", F.lit("insert"))
+            )
+        )
+    engine.store.overwrite(engine.spark, table, final, cdc_events=events)
+    return _summary(engine, **(n if tracked else get()))
 
 
 # ---------------------------------------------------------------------------

@@ -709,6 +709,13 @@ class TableStore:
           join (size-gated broadcast of the key frame; AQE otherwise),
           not a collected IN-list.
 
+        The new vector is the old one plus the newly matched positions,
+        written as one file. Without change tracking that write is the
+        only action: two Spark jobs (the scan shuffled to one partition,
+        then the write), with the count observed on it. A tracked table
+        first checkpoints the matched rows, which feed both the vector
+        and the CDC sidecar.
+
         Returns the number of newly deleted row positions.
         """
         if (predicate is None) == (using is None):
@@ -742,31 +749,30 @@ class TableStore:
             matched = marked.join(keys, on, "left_semi")
         else:
             matched = marked.filter(predicate)
-        # r15 (guide §2.3 — narrow what materializes): the checkpoint
-        # below is consumed by the DV write (positions only) and, when
-        # a CDC consumer exists, the event sidecar (payload columns).
-        # Without change tracking, carrying the payload through the
-        # checkpoint is pure overhead — project to the two positions.
-        if not self.change_tracking(name):
+        tracked = self.change_tracking(name)
+        if not tracked:
             matched = matched.select("relpath", "row_index")
         old_dv_dir = self._dv_dir(old_dir)
         old_dv = None
         if os.path.isdir(old_dv_dir):
             old_dv = self._read_dv(spark, old_dv_dir)
-            # rows already deleted by a prior DV are not deleted again
+            # rows already deleted by a prior DV are not deleted again,
+            # so the union below is disjoint and needs no distinct
             matched = matched.join(
                 old_dv, ["relpath", "row_index"], "left_anti"
             )
-        # r16: the deleted-position count rides the checkpoint's
-        # materialization via Observation — no separate count job.
-        from ..ops.observe import materialized
+        # The deleted-position count rides the DV write. Only the CDC
+        # sidecar needs the matched rows twice, so only a tracked table
+        # checkpoints them.
+        from ..ops.observe import materialized, observed
 
-        new_hits, metrics = materialized(matched)
-        n_new = metrics["n"]
+        if tracked:
+            new_hits, metrics = materialized(matched)
+        else:
+            new_hits, get = observed(matched)
         merged_dv = new_hits.select("relpath", "row_index")
         if old_dv is not None:
             merged_dv = merged_dv.unionByName(old_dv)
-        merged_dv = merged_dv.distinct()
 
         new_dir = os.path.join(self._dir(name), f"v={v + 1}")
         shutil.rmtree(new_dir, ignore_errors=True)
@@ -783,12 +789,15 @@ class TableStore:
                 )
         staging = os.path.join(self._dir(name), "_dv_staging")
         shutil.rmtree(staging, ignore_errors=True)
-        merged_dv.coalesce(1).write.mode("overwrite").parquet(staging)
+        # One DV file. repartition, not coalesce: coalesce(1) would pull
+        # the whole old-version scan into a single task.
+        merged_dv.repartition(1).write.mode("overwrite").parquet(staging)
         self._promote_dir(staging, self._dv_dir(new_dir))
+        n_new = metrics["n"] if tracked else get()["n"]
         # Change manifest (r10): the newly deleted rows, from the same
         # checkpointed frame the DV was derived from — O(deleted).
         # Gated (r11): no CDC consumer -> no sidecar job.
-        if self.change_tracking(name):
+        if tracked:
             self.write_cdc_events(
                 spark,
                 name,

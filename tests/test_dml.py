@@ -299,6 +299,160 @@ class TestDeleteTruncateMerge:
         ]
 
 
+def _counts(out):
+    row = out.collect()[0]
+    return row["rows_inserted"], row["rows_updated"], row["rows_deleted"]
+
+
+class TestMergeClauses:
+    """Each pair of target and source rows takes the first WHEN clause,
+    in statement order, whose AND condition holds; each target row is
+    written once."""
+
+    @pytest.fixture()
+    def ks(self, spark, engine):
+        def make(name, rows, ddl="k long, s string"):
+            engine.store.create(spark, name, spark.createDataFrame(rows, ddl))
+
+        return make
+
+    def test_first_clause_that_holds_applies(self, engine, ks):
+        ks("t", [(1, "a"), (2, "b")])
+        ks("src", [(1,), (2,), (3,)], "k long")
+        out = engine.query(
+            "merge into t using src on t.k = src.k "
+            "when matched and src.k = 1 then update set s = 'first' "
+            "when matched and src.k = 2 then update set s = 'second' "
+            "when not matched and src.k = 9 then insert (k, s) values (src.k, 'nine') "
+            "when not matched then insert (k, s) values (src.k, 'other')"
+        )
+        assert _counts(out) == (1, 2, 0)
+        assert _rows(engine.query("select * from t"), "k", "s") == [
+            (1, "first"), (2, "second"), (3, "other"),
+        ]
+
+    @pytest.mark.parametrize(
+        "clauses",
+        [
+            "when matched then update set s = 'x' "
+            "when matched and src.k = 1 then delete",
+            "when not matched then insert (k) values (src.k) "
+            "when not matched then insert (k) values (src.k + 1)",
+        ],
+    )
+    def test_unconditioned_clause_must_be_last_of_its_kind(
+        self, engine, ks, clauses
+    ):
+        ks("t", [(1, "a")])
+        ks("src", [(1,)], "k long")
+        with pytest.raises(ValueError, match="must be the last of its kind"):
+            engine.query(f"merge into t using src on t.k = src.k {clauses}")
+
+    def test_several_source_rows_match_one_target_row(self, engine, ks):
+        ks("t", [(1, "a"), (2, "b"), (3, "c")])
+        ks(
+            "src",
+            [(1, "x", False), (1, "y", False), (2, "keep", False),
+             (2, "gone", True), (4, "new", False)],
+            "k long, s string, dead boolean",
+        )
+        out = engine.query(
+            "merge into t using src on t.k = src.k "
+            "when matched and src.dead then delete "
+            "when matched then update set s = src.s "
+            "when not matched then insert (k, s) values (src.k, src.s)"
+        )
+        # a target row is written once, and counted once; among its
+        # pairs the earliest clause wins (k=2 is deleted)
+        assert _counts(out) == (1, 1, 1)
+        got = dict(_rows(engine.query("select * from t"), "k", "s"))
+        assert set(got) == {1, 3, 4}
+        assert got[1] in ("x", "y") and got[3] == "c" and got[4] == "new"
+
+    def test_non_equi_on(self, engine, ks):
+        ks("t", [(1, 0), (5, 0), (10, 0)], "k long, v long")
+        ks("src", [(4,), (0,)], "k long")
+        out = engine.query(
+            "merge into t using src on t.k < src.k "
+            "when matched then update set v = src.k "
+            "when not matched then insert (k, v) values (src.k, -1)"
+        )
+        assert _counts(out) == (1, 1, 0)
+        assert _rows(engine.query("select * from t"), "k", "v") == [
+            (0, -1), (1, 4), (5, 0), (10, 0),
+        ]
+
+    def test_null_condition_does_not_take_the_clause(self, engine, ks):
+        ks("t", [(1, "a"), (2, "b"), (3, "c")])
+        ks(
+            "src",
+            [(1, None), (2, True), (4, None), (5, True)],
+            "k long, flag boolean",
+        )
+        out = engine.query(
+            "merge into t using src on t.k = src.k "
+            "when matched and src.flag then delete "
+            "when matched then update set s = 'u' "
+            "when not matched and src.flag then insert (k, s) values (src.k, 'i')"
+        )
+        assert _counts(out) == (1, 1, 1)
+        assert _rows(engine.query("select * from t"), "k", "s") == [
+            (1, "u"), (3, "c"), (5, "i"),
+        ]
+
+    def test_self_merge(self, engine, ks):
+        ks("t", [(1, 10), (2, 20), (3, 30)], "k long, v long")
+        out = engine.query(
+            "merge into t using t s on t.k = s.k + 1 "
+            "when matched then update set v = s.v "
+            "when not matched then insert (k, v) values (s.k + 100, s.v)"
+        )
+        assert _counts(out) == (1, 2, 0)
+        assert _rows(engine.query("select * from t"), "k", "v") == [
+            (1, 10), (2, 10), (3, 20), (103, 30),
+        ]
+
+    def test_empty_source_and_empty_target(self, engine, ks):
+        merge = (
+            "merge into {t} using {s} on {t}.k = {s}.k "
+            "when matched then update set s = {s}.s "
+            "when not matched then insert (k, s) values ({s}.k, {s}.s)"
+        )
+        ks("full_t", [(1, "a")])
+        ks("empty_t", [])
+        ks("empty_s", [])
+        ks("full_s", [(1, "b")])
+        out = engine.query(merge.format(t="full_t", s="empty_s"))
+        assert _counts(out) == (0, 0, 0)
+        assert _rows(engine.query("select * from full_t"), "k", "s") == [(1, "a")]
+        out = engine.query(merge.format(t="empty_t", s="full_s"))
+        assert _counts(out) == (1, 0, 0)
+        assert _rows(engine.query("select * from empty_t"), "k", "s") == [(1, "b")]
+
+    def test_quoted_when_is_no_clause(self, engine, ks):
+        ks("t", [(1, "a")])
+        ks("src", [(2,)], "k long")
+        out = engine.query(
+            "merge into t using src on t.k = src.k when not matched then "
+            "insert (k, s) values (src.k, 'when matched then delete')"
+        )
+        assert _counts(out) == (1, 0, 0)
+        assert _rows(engine.query("select * from t"), "k", "s") == [
+            (1, "a"), (2, "when matched then delete"),
+        ]
+
+    def test_scalar_subquery_in_set(self, engine, ks):
+        ks("t", [(1, 1), (2, 2)], "k long, v long")
+        ks("src", [(2, 5)], "k long, v long")
+        ks("bonus", [(100,), (300,)], "w long")
+        out = engine.query(
+            "merge into t using src on t.k = src.k "
+            "when matched then update set v = src.v + (select max(w) from bonus)"
+        )
+        assert _counts(out) == (0, 1, 0)
+        assert _rows(engine.query("select * from t"), "k", "v") == [(1, 1), (2, 305)]
+
+
 class TestScriptAndErrors:
     def test_execute_script_reference_statement_sequence(self, spark, engine):
         """The bulk-load macro's statement sequence as one script:

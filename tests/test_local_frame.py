@@ -132,12 +132,16 @@ SUMMARIES = [
     {"rows_updated": 15, "rows_inserted": 15},
     {"rows_deleted": 45},
 ]
-# Spark jobs of one cycle, each summary collected, async shuffle and
-# broadcast stages included: the UPDATE's and MERGE's target rewrites,
-# the statements' checkpoints and the DELETE's deletion-vector pass.
-# Reading the four summaries launches none, and neither does reading a
-# deletion vector back: its schema is given, not inferred.
-CYCLE_JOBS = 17
+# Spark jobs of each statement, its summary collected, async shuffle
+# and broadcast stages included. INSERT is its write; UPDATE a shuffle
+# stage and its rewrite; MERGE the two shuffle stages of target FULL
+# OUTER JOIN source, the shuffle of its one-row-per-target window, and
+# the rewrite; DELETE its scan shuffled into one deletion-vector file,
+# and that write. No statement checkpoints. Reading the four summaries
+# launches no job, and neither does reading a deletion vector back: its
+# schema is given, not inferred.
+STATEMENT_JOBS = (1, 2, 4, 2)
+CYCLE_JOBS = sum(STATEMENT_JOBS)
 
 
 @pytest.fixture(scope="module")
@@ -183,6 +187,15 @@ def test_sql_dml_cycle_job_budget(spark, dml_engine):
             got = [_counts(dml_engine.query(stmt).collect()[0]) for stmt in CYCLE]
         assert got == SUMMARIES
     assert dml_engine.store.read(spark, "orders_w").count() == 1500
+
+
+def test_sql_dml_statement_job_budgets(spark, dml_engine):
+    for stmt in CYCLE:
+        dml_engine.query(stmt).collect()
+    for stmt, budget, want in zip(CYCLE, STATEMENT_JOBS, SUMMARIES):
+        with job_budget(spark, budget):
+            got = _counts(dml_engine.query(stmt).collect()[0])
+        assert got == want
 
 
 def _create_data_frame_calls(node) -> int:

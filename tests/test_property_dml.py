@@ -55,13 +55,16 @@ def _apply_model(model: list[dict], op) -> None:
         _, m, r = op
         model[:] = [row for row in model if row["k"] % m != r]
     elif kind == "merge":
-        # ON t.k = s.k; matched -> update v/s from src (one arbitrary
-        # src row per target — make src keys unique so it's
+        # ON t.k = s.k; matched and src.v < 0 -> delete; other matches
+        # -> update v/s from src (src keys made unique so the result is
         # deterministic); not matched -> insert.
         src = {}
         for k, v, s in op[1]:
             src[k] = (v, s)  # last write wins = unique keys
         present = {row["k"] for row in model}
+        model[:] = [
+            row for row in model if not (row["k"] in src and src[row["k"]][0] < 0)
+        ]
         for row in model:
             if row["k"] in src:
                 row["v"], row["s"] = src[row["k"]]
@@ -91,6 +94,7 @@ def _apply_engine(engine, op) -> None:
         )
         engine.query(
             f"merge into t using ({union}) src on t.k = src.k "
+            "when matched and src.v < 0 then delete "
             "when matched then update set v = src.v, s = src.s "
             "when not matched then insert (k, v, s) values (src.k, src.v, src.s)"
         )

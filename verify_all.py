@@ -9,10 +9,11 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
 
 spec = importlib.util.spec_from_file_location(
-    "__spark_entry__", "/root/repo/__spark_entry__.py"
+    "__spark_entry__", os.path.join(HERE, "__spark_entry__.py")
 )
 mod = importlib.util.module_from_spec(spec)
 spec.loader.exec_module(mod)
