@@ -385,12 +385,14 @@ def _insert(engine, sql: str) -> DataFrame:
     # r16: the versioned write is the ONLY action — non-deterministic
     # body expressions still evaluate exactly once (the contract the
     # former localCheckpoint bought with an extra materialization job),
-    # and the row count rides the write via Observation instead of a
-    # separate count job. 3 Spark jobs per INSERT -> 1.
+    # and store.append counts the rows on the write's Observation
+    # instead of a separate count job. 3 Spark jobs per INSERT -> 1. A
+    # 0-row INSERT commits no version.
     src = _run_select(engine, body)
-    aligned, get = observed(_aligned_for_insert(engine, table, src, cols))
-    engine.store.append(engine.spark, table, aligned)
-    return _summary(engine, rows_inserted=get()["n"])
+    n = engine.store.append(
+        engine.spark, table, _aligned_for_insert(engine, table, src, cols)
+    )
+    return _summary(engine, rows_inserted=n)
 
 
 # ---------------------------------------------------------------------------
@@ -508,11 +510,12 @@ def _insert_multi(engine, sql: str) -> DataFrame:
                 )
             else:
                 proj = rows
-            aligned, get = observed(
-                _aligned_for_insert(engine, table, proj, item["cols"])
+            n = engine.store.append(
+                engine.spark,
+                table,
+                _aligned_for_insert(engine, table, proj, item["cols"]),
             )
-            engine.store.append(engine.spark, table, aligned)
-            results[table] = results.get(table, 0) + get()["n"]
+            results[table] = results.get(table, 0) + n
     return local_frame(
         engine.spark, sorted(results.items()), "table string, rows_inserted long"
     )
@@ -1421,9 +1424,10 @@ def _copy(engine, sql: str) -> DataFrame:
         # columns positionally either way, like we do below.
         reader = reader.option("header", fmt.get("skip_header") == "1")
     df = getattr(reader, ftype)(source.strip("'"))
-    aligned, get = observed(_aligned_for_insert(engine, table, df, None))
-    engine.store.append(engine.spark, table, aligned)
-    return _summary(engine, rows_loaded=get()["n"])
+    n = engine.store.append(
+        engine.spark, table, _aligned_for_insert(engine, table, df, None)
+    )
+    return _summary(engine, rows_loaded=n)
 
 
 # ---------------------------------------------------------------------------

@@ -87,10 +87,6 @@ class Context:
     def this_view(self) -> str:
         return self.engine.view_name(self.model.name)
 
-    def this_df(self) -> DataFrame | None:
-        """The model's existing materialized output, if any."""
-        return self.engine.existing(self.model.name)
-
     def var(self, key: str, default=None):
         return self.engine.vars.get(key, default)
 

@@ -396,7 +396,14 @@ class TableStore:
     def exists(self, name: str) -> bool:
         return self.current_version(name) is not None
 
-    def _set_version(self, name: str, v: int, op: str = "commit") -> None:
+    def _set_version(
+        self, name: str, v: int, op: str = "commit", watermark=None
+    ) -> None:
+        """Swap the version pointer to ``v``. The high-watermark record
+        (see ``high_watermark``) is replaced by ``watermark``, the one
+        for ``v``, or dropped — before the swap, so a record never
+        outlives the data it describes."""
+        self._put_watermark(name, v, watermark)
         tmp = self._version_file(name) + ".tmp"
         with open(tmp, "w") as f:
             f.write(str(v))
@@ -417,6 +424,69 @@ class TableStore:
                 f.write("\n")
         except OSError:
             pass  # commit already durable; the log row is best-effort
+
+    # -- high-watermark record ----------------------------------------------
+    # An incremental model keeps the rows past max(col) of its own table
+    # (transactions_daily.sql:19). Snowflake answers that MAX from
+    # micro-partition metadata; this store keeps it in _WATERMARK for ONE
+    # version: high_watermark scans once after any other kind of commit
+    # and records the result, append folds its rows' max into the record
+    # on the Observation that counts them, and every other commit drops
+    # the record (_set_version). A max is kept as Spark renders it
+    # (cast to string) and restored with a cast in the same session time
+    # zone, so the round trip is exact and never passes through Python.
+    def _watermark_file(self, name: str) -> str:
+        return os.path.join(self._dir(name), "_WATERMARK")
+
+    @staticmethod
+    def _session_tz(spark: SparkSession) -> str:
+        return spark.conf.get("spark.sql.session.timeZone")
+
+    def _watermark(self, spark: SparkSession, name: str, v: int) -> dict:
+        """``{col: [type, max]}`` recorded for version ``v`` in this
+        session's time zone; empty when there is no such record."""
+        try:
+            with open(self._watermark_file(name)) as f:
+                rec = json.load(f)
+        except (FileNotFoundError, ValueError):
+            return {}
+        if rec.get("version") != v or rec.get("tz") != self._session_tz(spark):
+            return {}
+        return rec["cols"]
+
+    def _put_watermark(self, name: str, v: int, watermark) -> None:
+        path = self._watermark_file(name)
+        if watermark is None:
+            try:
+                os.remove(path)
+            except FileNotFoundError:
+                pass
+            return
+        tmp = path + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump({"version": v, **watermark}, f)
+        os.replace(tmp, path)
+
+    @_locked_write
+    def high_watermark(self, spark: SparkSession, name: str, col: str):
+        """``max(col)`` over the current version as a typed literal
+        Column, or None when the max is NULL (an empty table). Read from
+        the record; when it has none for this version, one scan computes
+        it and records it."""
+        v = self.current_version(name)
+        if v is None:
+            raise FileNotFoundError(f"table not found: {name}")
+        cols = self._watermark(spark, name, v)
+        if col not in cols:
+            df = self.read(spark, name).select(col)
+            dtype = df.schema[0].dataType.simpleString()
+            mx = df.agg(F.max(col).cast("string")).first()[0]
+            cols = {**cols, col: [dtype, mx]}
+            self._put_watermark(
+                name, v, {"tz": self._session_tz(spark), "cols": cols}
+            )
+        dtype, mx = cols[col]
+        return None if mx is None else F.lit(mx).cast(dtype)
 
     def vacuum(
         self,
@@ -996,8 +1066,9 @@ class TableStore:
         self._set_version(name, v, op="create")
 
     @_locked_write
-    def append(self, spark: SparkSession, name: str, df: DataFrame) -> None:
+    def append(self, spark: SparkSession, name: str, df: DataFrame) -> int:
         """insert into ... select (salesforce_bulk_load.sql:35-47).
+        Returns the number of rows appended.
 
         Commits a NEW version: existing data files hard-link into
         ``v+1`` (deletion-vector sidecar carried) and only the appended
@@ -1007,13 +1078,46 @@ class TableStore:
         immutability: concurrent readers of v could see rows appear
         mid-read, and ``AT(VERSION => v)`` time travel could not
         reconstruct the pre-append state. Now every INSERT is a
-        versioned, time-travelable, CDC-visible commit."""
+        versioned, time-travelable, CDC-visible commit.
+
+        The write is the only action over ``df``: an Observation on it
+        counts the rows and folds their maxima into the high-watermark
+        record. A 0-row append commits nothing — the version, and so
+        every stream on the table, stays where it was, as a 0-row DML
+        leaves Snowflake's — and its staged directories are removed."""
+        from ..ops.observe import observed
+
         if not self.exists(name):
+            df, get = observed(df)
             self.create(spark, name, df)
-            return
+            return get()["n"]
         df = self._enforced(df, name)  # CHECK constraints
         pcol = self.partition_by(name)
         v = self.current_version(name)
+        # Fold the batch's maxima into the record only when each column
+        # keeps its recorded type; a column the batch lacks reads NULL
+        # in the new files and keeps its old max.
+        wm = self._watermark(spark, name, v)
+        types = {
+            f.name.lower(): f.dataType.simpleString() for f in df.schema.fields
+        }
+        folded = [c for c in wm if c.lower() in types]
+        if any(types[c.lower()] != wm[c][0] for c in folded):
+            wm, folded = None, []
+        df, get = observed(
+            df,
+            n=F.count(F.lit(1)).cast("long"),
+            # "=" prefixes a max, so a NULL one (read as 0) stays apart
+            # from an empty string
+            **{
+                f"wm{i}": F.concat(
+                    F.lit("="),
+                    F.greatest(F.max(c), F.lit(wm[c][1]).cast(wm[c][0]))
+                    .cast("string"),
+                )
+                for i, c in enumerate(folded)
+            },
+        )
         self._clear_cdc_sidecars(name, v + 1)
         old_dir = os.path.join(self._dir(name), f"v={v}")
         new_dir = os.path.join(self._dir(name), f"v={v + 1}")
@@ -1033,7 +1137,15 @@ class TableStore:
         writer = df.write.mode("append")
         if pcol:
             writer = writer.partitionBy(pcol)
-        writer.parquet(new_dir)
+        try:
+            writer.parquet(new_dir)
+        except BaseException:
+            self._discard_staged(new_dir)
+            raise
+        m = get()
+        if m["n"] == 0:
+            self._discard_staged(new_dir)
+            return 0
         # The linked _SCHEMA.json describes only the OLD files; replace
         # it with the merged stamp (old fields + appended-only fields),
         # or drop it when the merge is unprovable — stale stamps must
@@ -1082,7 +1194,21 @@ class TableStore:
                 with open(tmp, "w") as f:
                     json.dump(meta, f)
                 os.replace(tmp, self._meta_file(name))
-        self._set_version(name, v + 1, op="append")
+        for i, c in enumerate(folded):
+            mx = m[f"wm{i}"]
+            wm[c] = [wm[c][0], mx[1:] if mx else None]
+        self._set_version(
+            name,
+            v + 1,
+            op="append",
+            watermark={"tz": self._session_tz(spark), "cols": wm} if wm else None,
+        )
+        return m["n"]
+
+    def _discard_staged(self, version_dir: str) -> None:
+        """Remove an uncommitted version directory and its DV sidecar."""
+        shutil.rmtree(version_dir, ignore_errors=True)
+        shutil.rmtree(self._dv_dir(version_dir), ignore_errors=True)
 
     @_locked_write
     def merge_upsert(

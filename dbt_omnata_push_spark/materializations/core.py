@@ -39,8 +39,11 @@ def materialize_incremental(engine, model) -> RunResult:
 
     ``rows_affected`` is the number of rows written (the CTAS's rows,
     or the incremental batch's), as dbt reports it — not the table's
-    size. The count rides an Observation on the write (CTAS) or on the
-    batch's one checkpoint, so it costs no extra Spark job.
+    size. The count rides an Observation on the write (CTAS, append) or
+    on the batch's one checkpoint (merge, insert_overwrite), so it costs
+    no extra Spark job. An empty batch commits nothing: a new version
+    would wake every downstream stream and CDC consumer, and in
+    Snowflake a 0-row DML leaves streams silent.
     """
     ctx = Context(engine, model)
     df = engine.build_df(model)
@@ -52,29 +55,28 @@ def materialize_incremental(engine, model) -> RunResult:
             partition_by=model.config.get("partition_by"),
         )
         return _published(engine, model, get()["n"])
-    # The batch is evaluated once: its checkpoint feeds both the
-    # emptiness test and the commit.
-    df, metrics = materialized(df)
-    n = metrics["n"]
+    key = model.config.get("unique_key")
+    if strategy not in (
+        None, "merge", "delete+insert", "append", "insert_overwrite"
+    ):
+        raise ValueError(f"unknown incremental_strategy: {strategy}")
+    if strategy != "insert_overwrite" and (strategy == "append" or not key):
+        # The append is the batch's only action and commits no 0-row
+        # version of its own.
+        n = engine.store.append(engine.spark, model.name, df)
+    else:
+        # merge_upsert reads its source twice: evaluate the batch once,
+        # and its checkpoint's count decides whether to commit at all.
+        df, metrics = materialized(df)
+        n = metrics["n"]
+        if n and strategy == "insert_overwrite":
+            engine.store.insert_overwrite(engine.spark, model.name, df)
+        elif n:
+            engine.store.merge_upsert(engine.spark, model.name, df, key)
     if n == 0:
-        # Empty incremental delta: commit NOTHING (r12). A 0-row
-        # append/merge would still cut a new table version, so every
-        # downstream stream would report has-data and every CDC
-        # consumer would walk a vacuous commit — in Snowflake a 0-row
-        # DML leaves streams silent.
         return _published(
             engine, model, 0, message="empty incremental batch — no commit"
         )
-    if strategy == "insert_overwrite":
-        engine.store.insert_overwrite(engine.spark, model.name, df)
-    else:
-        key = model.config.get("unique_key")
-        if strategy not in (None, "merge", "delete+insert", "append"):
-            raise ValueError(f"unknown incremental_strategy: {strategy}")
-        if key and strategy != "append":
-            engine.store.merge_upsert(engine.spark, model.name, df, key)
-        else:
-            engine.store.append(engine.spark, model.name, df)
     return _published(engine, model, n)
 
 
@@ -124,13 +126,13 @@ def materialize_tracking_table(engine, model) -> RunResult:
 
 def high_watermark_incremental(ctx: Context, df, watermark_col: str):
     """Helper for model builders: apply the reference's scalar-subquery
-    watermark filter (transactions_daily.sql:19) on incremental runs."""
+    watermark filter (transactions_daily.sql:19) on incremental runs.
+    The max comes from the store's high-watermark record, so only the
+    first run after a commit other than an append scans the table."""
     if not ctx.is_incremental():
         return df
-    existing = ctx.this_df()
-    if existing is None:
-        return df
-    wm = existing.agg(F.max(watermark_col).alias("wm")).collect()[0]["wm"]
+    engine = ctx.engine
+    wm = engine.store.high_watermark(engine.spark, ctx.model.name, watermark_col)
     if wm is None:
         return df
-    return df.filter(F.col(watermark_col) > F.lit(wm))
+    return df.filter(F.col(watermark_col) > wm)

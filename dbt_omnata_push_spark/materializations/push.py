@@ -7,8 +7,8 @@ D1, D4-D8):
 - a Salesforce load evaluates its records exactly once: one
   localCheckpoint carries a partition-local row index and, through an
   Observation on the same job, the count behind the empty-load
-  short-circuit; the push's output is checkpointed too, so a lost
-  block fails the load instead of calling the API again;
+  short-circuit. The push itself runs inside the log append's write
+  job, its only action, so each record reaches the API once;
 - every tracking-table commit is an append, so no push rewrites a
   tracking table. A Salesforce load appends one log row per record
   after the push and its task row once, after close_job, carrying both
@@ -164,10 +164,10 @@ def _salesforce_bulk_load(engine, model, records: DataFrame, legacy=False) -> Ru
             )
 
     try:
-        # The push runs in this one checkpoint job. A checkpoint, unlike a
-        # persist, cannot be evicted and recomputed, so a lost block fails
-        # the statement instead of calling the remote API a second time.
-        pushed = indexed.mapInPandas(push_batches, _PUSH_SCHEMA).localCheckpoint()
+        # The log append's write job is the push's only action: each
+        # record reaches the remote API once, and its log row is written
+        # as its result comes back.
+        pushed = indexed.mapInPandas(push_batches, _PUSH_SCHEMA)
         logs = pushed.select(
             F.lit(job_id).alias("job_id"),
             # deterministic id (reference: UUID_STRING(), line 40)

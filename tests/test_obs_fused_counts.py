@@ -26,8 +26,10 @@ def test_insert_count_rides_write(eng):
     eng.query("create table t as select 1 as v")
     r = _one(eng.query("insert into t select 2"))
     assert r.rows_inserted == 1
+    v = eng.store.current_version("t")
     r = _one(eng.query("insert into t select v + 10 from t where v < 0"))
     assert r.rows_inserted == 0  # empty write must observe 0
+    assert eng.store.current_version("t") == v  # and commit no version
     assert eng.query("select count(*) as n from t").collect()[0].n == 2
 
 

@@ -1,7 +1,8 @@
 """One reverse-ETL push cycle: an incremental daily model, then a
 Salesforce bulk load of the account-days not yet in the log table.
 
-Pins the cycle's Spark job count, checks that a cycle with nothing new
+Pins the Spark job counts of the first incremental cycle, a steady
+cycle and an empty one, checks that a cycle with nothing new
 never reaches the connector or the tasks table, and checks that a
 connector resolved through the registry (a fresh instance per load)
 keeps every cycle's log rows under distinct job ids."""
@@ -27,15 +28,22 @@ N = 20  # accounts; each cycle brings one new day, so N new records
 DAY0 = datetime.date(2001, 1, 1)
 NAMESPACE = "push_cycle_jobs"
 # Spark jobs, shuffle and broadcast stages included, of one non-empty
-# cycle: the daily model's watermark scan, batch checkpoint and append;
-# the push's records checkpoint, push checkpoint and log append; and one
-# append of the task row after close_job, close metadata included, so
-# no commit rewrites the tasks table. The task row is a LocalRelation
+# steady-state cycle: the daily model's batch shuffle and its append
+# (the append is the batch's only action, and the store keeps the
+# watermark, so there is no scan); the push model's two shuffles, its
+# records checkpoint (row index, plus the count behind the empty-load
+# short-circuit), and one write job that both pushes the records and
+# appends their log rows; and one append of the task row after
+# close_job, close metadata included. The task row is a LocalRelation
 # (engine.session.local_frame): reading it launches no job of its own.
-CYCLE_JOBS = 10
-# One empty cycle: the watermark scan and the two checkpoints that find
-# no rows.
-EMPTY_CYCLE_JOBS = 5
+CYCLE_JOBS = 6
+# The first incremental cycle after the CTAS also pays the two jobs of
+# the one scan that records the daily table's watermark.
+FIRST_CYCLE_JOBS = CYCLE_JOBS + 2
+# One empty cycle: the daily batch's shuffle (its append finds no rows
+# and commits nothing), the push model's two shuffles and its records
+# checkpoint, which finds no rows.
+EMPTY_CYCLE_JOBS = 4
 
 
 class _LoggedSalesforce(MockSalesforceConnector):
@@ -131,16 +139,31 @@ class _Cycles:
 
 @pytest.fixture(scope="module")
 def cycles(spark, tmp_path_factory):
-    return _Cycles(spark, tmp_path_factory.mktemp("push_cycles"))
+    """The CTAS cycle, then the first incremental cycle, which records
+    the daily table's watermark; every later cycle reads it."""
+    c = _Cycles(spark, tmp_path_factory.mktemp("push_cycles"))
+    c.arrive()
+    with job_budget(spark, FIRST_CYCLE_JOBS):
+        c.first = c.engine.run()
+    return c
+
+
+def _cycle_results(res):
+    assert res["daily"].rows_affected == N  # rows written, not table size
+    assert res["daily_load"].status == "success"
+    assert res["daily_load"].rows_affected == N
+
+
+def test_first_incremental_cycle(cycles):
+    """The fixture runs this cycle under FIRST_CYCLE_JOBS."""
+    _cycle_results(cycles.first)
 
 
 def test_nonempty_cycle_job_budget_and_log_keys(spark, cycles):
     cycles.arrive()
     with job_budget(spark, CYCLE_JOBS):
         res = cycles.engine.run()
-    assert res["daily"].rows_affected == N  # rows written, not table size
-    assert res["daily_load"].status == "success"
-    assert res["daily_load"].rows_affected == N
+    _cycle_results(res)
     # Every cycle's log rows survive, keyed under the cycle's own job.
     logs = cycles.table(tracking.SFDC_LOAD_TASK_LOGS)
     assert logs.count() == N * cycles.days

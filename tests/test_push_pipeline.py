@@ -161,9 +161,9 @@ def test_singular_tests_pass(engines):
 def test_remote_calls_exactly_once(engines):
     """Each record reaches the remote API exactly once across both runs.
 
-    Guards the persist-before-merge fix: merge_upsert evaluates its source
-    twice, so an unpersisted mapInPandas push stage would call load_batch
-    on every record twice per run (2x remote writes and API traffic)."""
+    The log append is the push's only action: a second action over the
+    mapInPandas push stage would call load_batch on every record again
+    (2x remote writes and API traffic)."""
     engine, *_ = engines
     sf = _tally(f"{engine.store.root}/sf_calls.log")
     mc = _tally(f"{engine.store.root}/mc_calls.log")

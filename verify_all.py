@@ -4,7 +4,6 @@ vs DuckDB at sf0.01, vanilla SparkSession, fresh process.
 Usage: python verify_all.py [name_filter ...]
 """
 import importlib.util
-import json
 import os
 import sys
 import time
@@ -59,7 +58,5 @@ print(f"\n== {len(names) - len(fails)}/{len(names)} ok "
       f"in {time.time()-t_all:.0f}s")
 for name, detail in fails:
     print(f"FAIL {name}: {detail[:500]}")
-with open("/tmp/verify_all_result.json", "w") as f:
-    json.dump({"total": len(names), "fails": [n for n, _ in fails]}, f)
 spark.stop()
 sys.exit(1 if fails else 0)
